@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.SparkTestBase
+import graft.transform.CurationCompiler
 
 /** The bounded-work streaming curation mode: per-batch TEXT work is
   * bounded by the batch (gate/digest/chunk/shingle run on batch rows
@@ -118,41 +119,51 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("shingle state lands bucketed on hb and the revocation probe" +
-    " prunes to the delta's buckets (partition-filtered scan)") {
+  test("shingle state lands as one (hb, h)-sorted file per batch and the" +
+    " revocation probe pushes its hb filter into the scan (statistics-pruned)") {
+    import org.apache.spark.sql.functions.col
     val (st, out, ck) = (tmp("sci_st6"), tmp("sci_out6"), tmp("sci_ck6"))
     runStream(corpus, 3, st, out, ck)
-    // Layout: every shingle batch partition is bucketed on hb.
-    val batches = new java.io.File(s"$st/shingles").listFiles()
+    val s = spark
+    import s.implicits._
+    val storeDir = s"$st/shingles"
+    assert(StreamCuration.shingleLayout(s, storeDir) ===
+      StreamCuration.ShingleLayout.Sorted(StreamCuration.ShingleBuckets))
+    // Layout: every batch dir is one data file, no hb= bucket dirs.
+    val batches = new java.io.File(storeDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
     assert(batches.nonEmpty)
-    // Every batch dir with data is bucketed: no bare parquet files at
-    // the batch level (a no-new-digest batch legitimately writes an
-    // empty dir), and at least one batch carries hb= buckets.
-    assert(batches.forall(
-        !_.listFiles().exists(_.getName.endsWith(".parquet"))),
-      "shingle data must live under hb= bucket dirs, not at batch level")
-    assert(batches.exists(_.listFiles().exists(_.getName.startsWith("hb="))),
-      "at least one batch must carry hb= bucket dirs")
-    val s = spark
-    val store = s.read.parquet(s"$st/shingles")
+    batches.foreach { b =>
+      assert(!b.listFiles().exists(_.isDirectory),
+        s"${b.getName}: shingle data must not live under hb= bucket dirs")
+      val data = b.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(data.length === 1, s"${b.getName} holds ${data.length} data files")
+      // ... sorted on (hb, h), with hb = h mod buckets as a column.
+      val rows = s.read.parquet(data.head.getPath).select("hb", "h").as[(Int, Long)]
+        .collect().toSeq
+      assert(rows === rows.sorted, s"${b.getName} is not sorted on (hb, h)")
+      assert(rows.forall { case (hb, h) =>
+        hb == java.lang.Math.floorMod(h, StreamCuration.ShingleBuckets.toLong) })
+    }
+    val store = s.read.parquet(storeDir)
     val allHb = store.select("hb").distinct().collect().map(_.getInt(0)).toSet
     assert(allHb.size > 1, "fixture must span multiple buckets or the prune is vacuous")
-    // The revocation probe's scan shape: an isin filter over probed
-    // buckets — it must reach the scan as a PARTITION filter (pruned
-    // dirs), not a post-scan data filter.
-    val probed = Seq(allHb.head)
-    val pruned = store.filter(org.apache.spark.sql.functions.col("hb")
-      .isin(probed: _*)).select("__h", "h")
-    val planStr = pruned.queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters"),
-      s"expected a partition-filtered scan, got:\n$planStr")
-    val pf = planStr.linesIterator
-      .find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("hb"), s"partition filter must bind hb: $pf")
-    // And the pruned read is semantically the bucket's rows.
-    assert(pruned.count() ===
-      store.filter(org.apache.spark.sql.functions.col("hb") === probed.head).count())
+    // The revocation probe with a one-shingle delta in one bucket: its
+    // hb filter must reach the scan as a PUSHED Parquet filter (the
+    // min/max-statistics prune), and it returns exactly that bucket.
+    val probedHb = allHb.min
+    val delta = store.filter(col("hb") === probedHb).select("h").limit(1)
+      .localCheckpoint()
+    val probe = StreamCuration.shingleStateFor(s, storeDir, delta)
+    val planStr = probe.queryExecution.executedPlan.toString
+    val pushed = planStr.linesIterator.find(_.contains("PushedFilters"))
+      .map(l => l.substring(l.indexOf("PushedFilters"))).getOrElse("")
+    assert(pushed.takeWhile(_ != ']').contains("hb"),
+      s"expected hb among the scan's pushed filters, got:\n$planStr")
+    val bucketRows = store.filter(col("hb") === probedHb).select("__h", "h")
+      .as[(String, Long)].collect().sorted.toSeq
+    assert(bucketRows.nonEmpty)
+    assert(probe.as[(String, Long)].collect().sorted.toSeq === bucketRows)
   }
 
   test("shingle-store layout versioning: marker wins, pre-marker bucketed" +
@@ -222,6 +233,140 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
 
     // 5. Empty/absent store: clean empty frame, no probe errors.
     assert(gotRows(tmp("sci_absent")) === Set.empty[(String, Long)])
+  }
+
+  private def writeTicks(ticks: Seq[Seq[ScDoc]], st: String, out: String,
+      from: Long = 0L): Unit = {
+    val s = spark; import s.implicits._
+    ticks.zipWithIndex.foreach { case (g, i) =>
+      StreamCuration.writeBatchIncremental(g.toDF(), from + i, cu, st, out)
+    }
+  }
+
+  private def output(out: String): Set[Seq[Any]] =
+    StreamCuration.readOutput(spark, out).collect().map(_.toSeq).toSet
+
+  test("layout lane: an hb=-dir store stamped 64 keeps hb= dirs under the" +
+    " new writer, and its output equals the batch chain") {
+    val s = spark
+    val (st, out) = (tmp("sci_hbst"), tmp("sci_hbout"))
+    val storeDir = s"$st/shingles"
+    val ticks = corpus.grouped(3).toSeq // doc 7 in tick 1, its eval in tick 2
+    writeTicks(ticks.take(1), st, out)
+    // Re-land tick 0's shingles the way the hb=-dir engine left them:
+    // `hb=` partition dirs and the bare bucket-count marker.
+    val b0 = s"$storeDir/batch_id=0"
+    val rows = s.read.parquet(b0).collect()
+    val schema = s.read.parquet(b0).schema
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(b0))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .write.partitionBy("hb").parquet(b0)
+    graft.sink.AtomicPointer.write(s.sparkContext.hadoopConfiguration,
+      storeDir, "64", name = "_BUCKETS")
+    assert(StreamCuration.shingleLayout(s, storeDir) ===
+      StreamCuration.ShingleLayout.Bucketed(64))
+    writeTicks(ticks.drop(1), st, out, from = 1L)
+    assert(StreamCuration.shingleLayout(s, storeDir) ===
+      StreamCuration.ShingleLayout.Bucketed(64))
+    assert(graft.sink.AtomicPointer.read(s.sparkContext.hadoopConfiguration,
+      storeDir, name = "_BUCKETS") === Some("64"))
+    val batches = new java.io.File(storeDir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
+    assert(batches.length === ticks.size)
+    batches.foreach { b =>
+      assert(!b.listFiles().exists(_.getName.endsWith(".parquet")),
+        s"${b.getName}: an hb=-dir store must not gain batch-level data files")
+    }
+    assert(batches.exists(_.listFiles().exists(_.getName.startsWith("hb="))))
+    assert(output(out) === batchTruth())
+    assert(!output(out).exists(_.head == 7L), "doc 7 must be revoked")
+  }
+
+  test("layout lane: a sorted store left without its marker (crash before" +
+    " the marker write) reads correctly and is re-stamped by the replay") {
+    import org.apache.spark.sql.functions.{col, pmod, lit}
+    val s = spark
+    import s.implicits._
+    val (st, out) = (tmp("sci_nmst"), tmp("sci_nmout"))
+    val storeDir = s"$st/shingles"
+    val ticks = corpus.grouped(3).toSeq
+    writeTicks(ticks.take(1), st, out)
+    new java.io.File(s"$storeDir/_BUCKETS").delete()
+    assert(StreamCuration.shingleLayout(s, storeDir) ===
+      StreamCuration.ShingleLayout.Sorted(64))
+    val store = s.read.parquet(storeDir).select("__h", "h").as[(String, Long)]
+      .collect().toSeq
+    val delta = store.take(2).map(_._2).toDF("h")
+    val deltaBuckets = delta.select(pmod(col("h"), lit(64))).as[Long].collect().toSet
+    val got = StreamCuration.shingleStateFor(s, storeDir, delta)
+      .as[(String, Long)].collect().sorted.toSeq
+    assert(got.nonEmpty)
+    assert(got === store.filter(r => deltaBuckets(java.lang.Math.floorMod(r._2, 64L)))
+      .sorted)
+    // The at-least-once replay of the crashed tick, then the rest.
+    writeTicks(ticks, st, out)
+    assert(graft.sink.AtomicPointer.read(s.sparkContext.hadoopConfiguration,
+      storeDir, name = "_BUCKETS") === Some("sorted:64"))
+    assert(output(out) === batchTruth())
+  }
+
+  test("multi-tick stats: after every tick (displacement, late revoking eval," +
+    " replay) readStats equals recounts of the written state") {
+    import org.apache.spark.sql.functions.{col, expr}
+    val s = spark
+    import s.implicits._
+    val dc = cu.decontam.get
+    val ticks = Seq(
+      Seq(ScDoc(50L, "alpha beta gamma delta epsilon zeta", "en"),
+        corpus(1), corpus(4), corpus(2)),                        // 2, 7, 3
+      Seq(ScDoc(10L, "alpha beta gamma delta epsilon zeta", "en"), // displaces 50
+        corpus(3), corpus(6)),                                   // 4, 9 (gated)
+      Seq(corpus(7), corpus(5)))                                 // eval 100 revokes 7; 8 dups 2
+    val (st, out) = (tmp("sci_msst"), tmp("sci_msout"))
+    def index(v: Long) = s.read.parquet(s"$st/index/v=$v").select("__h", "id")
+      .as[(String, Long)].collect().toSet
+    def check(bid: Int): Unit = {
+      val soFar = ticks.take(bid + 1).flatten
+      val batch = ticks(bid).toDF()
+      val hits = CurationCompiler.compileDecontam(dc, cu.idField, cu.textField)(
+        soFar.toDF()).select("doc_id").as[Long].collect().toSeq
+      val cand = batch.filter(!expr(dc.evalWhere) && !col("doc_id").isin(hits: _*))
+      val idx = index(bid.toLong)
+      val prev = if (bid == 0) Set.empty[(String, Long)] else index(bid - 1L)
+      val recount = Map(
+        "batch_rows" -> ticks(bid).size.toLong,
+        "gated_rows" -> CurationCompiler.gate(cu)(cand).count(),
+        // New winners are never revoked in their own tick (their text
+        // passed the full eval state at arrival), so they are exactly
+        // the index rows this tick changed.
+        "new_winner_rows" -> (idx -- prev).size.toLong,
+        "index_rows" -> idx.size.toLong)
+      assert(StreamCuration.readStats(s, st)(bid.toLong) === recount, s"tick $bid")
+      assert(output(out) === batchTruth(soFar), s"tick $bid output")
+    }
+    ticks.indices.foreach { i => writeTicks(Seq(ticks(i)), st, out, from = i.toLong); check(i) }
+    val before = StreamCuration.readStats(s, st)
+    writeTicks(Seq(ticks.last), st, out, from = ticks.size - 1L) // replay
+    check(ticks.size - 1)
+    assert(StreamCuration.readStats(s, st) === before)
+    val ids = index(ticks.size - 1L).map(_._2)
+    assert(ids.contains(10L) && !ids.contains(50L) && !ids.contains(7L))
+  }
+
+  test("an empty first tick and an all-gated tick observe exact zero stats") {
+    val (st, out) = (tmp("sci_zst"), tmp("sci_zout"))
+    writeTicks(Seq(Seq.empty, Seq(corpus(6))), st, out) // doc 9 is too short
+    def row(batch: Long) = Map("batch_rows" -> batch, "gated_rows" -> 0L,
+      "new_winner_rows" -> 0L, "index_rows" -> 0L)
+    assert(StreamCuration.readStats(spark, st) === Map(0L -> row(0L), 1L -> row(1L)))
+  }
+
+  test("a fresh-state tick on the spec corpus leaves at most 16 state data files") {
+    val st = tmp("sci_files")
+    writeTicks(Seq(corpus), st, tmp("sci_filesout"))
+    val data = org.apache.commons.io.FileUtils.listFiles(new java.io.File(st),
+        Array("parquet"), true).size
+    assert(data <= 16, s"a fresh tick wrote $data state data files")
   }
 
   test("dedup displacement: a smaller id arriving later replaces the winner") {
