@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Standard engine session factory.
+/** Standard engine session factory: the only place a session is built
+  * (`GraftSessionSpec` fails on any other `builder()` call in `src/`).
+  * A caller that needs a different runtime SQL conf sets it with
+  * `spark.conf.set` after `create`; the caller sets its own log level.
   *
   * - ANSI mode OFF: the config DSL's contract is null-on-bad-parse
   *   (reference is PySpark/Spark-3 permissive; transform_data.py casts

@@ -41,11 +41,11 @@ object Tables {
   /** Resolved-relation cache, keyed by (session, path) — the engine's
     * stand-in for a metastore catalog: `spark.read.parquet` re-runs
     * file listing, footer schema inference and DataSource resolution
-    * on EVERY call (measured ~64 ms/table on this box — ResolveProbe;
-    * across the 252-query × 3-rep bench that re-resolution was a
-    * double-digit share of total wall time). A production deployment
-    * resolves a table once through its catalog; this map is that, for
-    * path tables. Only IMMUTABLE-per-JVM paths may go through it: the
+    * on EVERY call (measured ~64 ms/table; OPTIMIZATION_r17.md,
+    * "Session-overhead floor", and VERDICT.md; across the 252-query ×
+    * 3-rep bench that re-resolution was a double-digit share of total
+    * wall time). A production deployment resolves a table once through
+    * its catalog; this map is that, for path tables. Only IMMUTABLE-per-JVM paths may go through it: the
     * driver fixture tables and the [[landOnce]]-guarded scratch
     * artifacts (built exactly once per JVM, then read-only) — paths
     * that are VERSIONED or rewritten in place (published index dirs,
@@ -54,25 +54,30 @@ object Tables {
     * conf — e.g. the AQE-off plan-guard session must not share plans
     * with the main one), and it caches RESOLUTION ONLY: every query
     * still builds its own plan on top and re-executes every job.
+    *
+    * The key's flag separates the two readers of one path:
+    * [[readImmutable]] caches the raw read, [[t]] the fixture frame
+    * with `events.ts` normalized. Sharing a key would let whichever
+    * ran first decide what the other returns.
     */
   private val resolvedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Boolean), DataFrame]()
 
   /** Cached read of an immutable-per-JVM parquet path (see
     * [[resolvedCache]] for the contract).
     */
   def readImmutable(spark: SparkSession, path: String): DataFrame =
-    resolvedCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
+    resolvedCache.computeIfAbsent((spark, path, false), _ => spark.read.parquet(path))
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark's vectorized
     // reader rejects; read nanos as long and truncate to micros (same
     // semantics as DuckDB's TIMESTAMP_NS → TIMESTAMP cast). Engine
-    // sessions (GraftSession/Bench/Verify/tests) set the conf at build
-    // time; this set-once guard covers foreign sessions (e.g. the
+    // sessions (everything built by GraftSession.create) set the conf at
+    // build time; this set-once guard covers foreign sessions (e.g. the
     // harness smoke session) without re-mutating conf on every read.
     if (spark.conf.get(NanosKey, "false") != "true") spark.conf.set(NanosKey, "true")
-    resolvedCache.computeIfAbsent((spark, s"$dir/$name.parquet"), _ => {
+    resolvedCache.computeIfAbsent((spark, s"$dir/$name.parquet", true), _ => {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events" &&
           df.schema("ts").dataType == org.apache.spark.sql.types.LongType)

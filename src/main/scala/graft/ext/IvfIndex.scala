@@ -236,8 +236,8 @@ object IvfIndex {
     * lands exactly the from-scratch index; above it the training sample
     * stays pinned at [[SimSearch.IvfParams.TrainSampleTarget]] and a
     * policy-triggered retrain costs the stride curve (~×1.8-1.9 per
-    * data decade, TrainProbe) instead of the full build's ~N^1.5 —
-    * routine maintenance, not a cluster-stalling event. The cell
+    * data decade, OUTLIERS_r14.md §3) instead of the full build's
+    * ~N^1.5 — routine maintenance, not a cluster-stalling event. The cell
     * REBUILD is one map-only broadcast-argmax pass over the corpus
     * ([[assignCells]] — every vector's cell changes when centroids do,
     * so one full pass is the floor).

@@ -89,10 +89,11 @@ object SimSearch {
       * scale as K/16 so recall holds as the cell count grows, with a
       * FLOOR of min(10, K): below K≈160 the K/16 fraction collapses to
       * 2–9 probes, and on near-uniform data (the fixture regime) a
-      * small absolute probe count is not enough — IvfSweep at the
-      * corpus-derived K=32 measured trained-centroid top-1 agreement
-      * 29/100 at 2 probes vs 80/100 at the 10-probe floor (exactly the
-      * 80% recall bar; 83 at 12). The floor hands over to the
+      * small absolute probe count is not enough — an IVF probe sweep
+      * (PLANS_r11.md, "What changed" #1) at the corpus-derived K=32
+      * measured trained-centroid top-1 agreement 29/100 at 2 probes
+      * vs 80/100 at the 10-probe floor (exactly the 80% recall bar; 83
+      * at 12). The floor hands over to the
       * fractional rule at K ≥ 160.
       */
     def forCorpus(corpusSize: Long): IvfParams = {
@@ -104,9 +105,9 @@ object SimSearch {
 
     /** Training-sample target for the sampled locked trainer: the
       * largest corpus the FULL locked build was measured affordable on
-      * (TrainProbe: a 50k-vector training set at the corpus-derived K
-      * trains in single-digit seconds; the next decade's full build
-      * rides ~N^1.5 to 321 s). [[trainStrideFor]] sizes the residue
+      * (OUTLIERS_r14.md §3: a 50k-vector training set at the
+      * corpus-derived K trains in single-digit seconds; the next
+      * decade's full build rides ~N^1.5 to 321 s). [[trainStrideFor]] sizes the residue
       * stride so the training SAMPLE stays pinned at this target —
       * per-iteration training cost then grows only with K (∝ √N)
       * instead of N·K.
@@ -136,8 +137,9 @@ object SimSearch {
       * The fixture's vectors are near-uniform (top-1 cosine ≈
       * 0.28-0.49), the adversarial case for cell assignment — many
       * true neighbors sit just across a centroid boundary, so top-1
-      * agreement climbs slowly with probe count (IvfSweep on
-      * sf0.001: probes 2/4/6/8/10/12 → 41/62/75/80/90/93 of 100).
+      * agreement climbs slowly with probe count (IVF probe sweep on
+      * sf0.001, PLANS_r05.md/PLANS_r11.md: probes 2/4/6/8/10/12 →
+      * 41/62/75/80/90/93 of 100).
       * 10 probes clears the 80% recall floor with margin; real
       * deployments go through [[forCorpus]], where clustered data
       * needs a far smaller probe fraction.
@@ -381,7 +383,7 @@ object SimSearch {
     * trained centroids recover the true cells (`SimSearchSpec` builds
     * such a corpus and pins the gap). On structureless near-uniform
     * data (the adversarial fixture) NO centroid choice helps: measured
-    * trained ≈ first-K at every probe count (`IvfSweep`), which is the
+    * trained ≈ first-K at every probe count (PLANS_r05.md), which is the
     * information-theoretic reality, not a training defect.
     *
     * Scale shape: centroids BROADCAST each round; assignment is a

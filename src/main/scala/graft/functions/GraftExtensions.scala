@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 /** SparkSessionExtensions hook registering the engine's custom
   * expressions as SQL functions — the idiomatic deployment packaging:
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * `graft.GraftSession.create` installs it, and
   * `spark.sql.extensions=graft.functions.GraftExtensions` makes them
   * available to plain SQL on any cluster, no code changes.
   * (Library call sites register lazily through DotProduct.fn etc. as

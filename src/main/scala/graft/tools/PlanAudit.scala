@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dumps formatted physical plans for the headline queries — the
   * plan-audit loop behind PLANS_r02.md.
   */
@@ -8,14 +7,11 @@ object PlanAudit {
     // SPARK_GRAFT_PLAN_AQE=off dumps the STATIC physical plan (AQE
     // disabled): ReuseExchange then shows as explicit ReusedExchange
     // nodes instead of being applied invisibly at runtime — the form
-    // the plans/r16 exchange-reuse evidence is committed in.
+    // the plans/r16 exchange-reuse evidence is committed in. AQE is a
+    // runtime conf, so the choice overrides the factory's AQE-on here.
     val aqe = if (sys.env.get("SPARK_GRAFT_PLAN_AQE").contains("off")) "false" else "true"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.create(8)
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val names = if (args.nonEmpty) args.toSeq else Seq(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev probe: materialize an N× scale-up of a fixture dir for scaling
@@ -22,14 +22,10 @@ object ScaleUp {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1: $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    // 32 shuffle partitions whatever the core count, as every committed
+    // sf1 fixture was built with, so a rebuilt fixture stays comparable.
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("ERROR")
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))

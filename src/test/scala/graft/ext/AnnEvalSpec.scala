@@ -179,7 +179,7 @@ class AnnEvalSpec extends SparkTestBase {
     assert(trainStrideFor(20000, 142) === 1)
     assert(trainStrideFor(50000, 224) === 1)
     // sf10 reproduces exactly the probed stride-4 configuration
-    // (TrainProbe / OUTLIERS_r14 §3: ×45 cheaper than the full build).
+    // (OUTLIERS_r14.md §3: ×45 cheaper than the full build).
     assert(trainStrideFor(200000, 448) === 4)
     // Next decades: sample stays pinned at the target.
     assert(trainStrideFor(2000000, 1415) === 40)

@@ -61,9 +61,9 @@ class SimSearchSpec extends SparkTestBase {
     val agree = brute.count { case (q, c) => ivf.get(q).contains(c) }
     // Near-uniform vectors are the adversarial case for cell
     // assignment (many neighbors sit just across a centroid
-    // boundary); the fixture's probe count was tuned by IvfSweep —
-    // probes=10 of 16 cells measures 90/100 here, so the 80% floor
-    // holds with margin. See IvfParams.fixture for the sweep table.
+    // boundary); the fixture's probe count was tuned by a probe sweep
+    // (PLANS_r05.md, PLANS_r11.md) — probes=10 of 16 cells measures
+    // 90/100 here, so the 80% floor holds with margin. See IvfParams.fixture for the sweep table.
     assert(agree >= 80, s"ivf top-1 agreement $agree/100 below bound")
   }
 

@@ -1,59 +1,33 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkTestBase
 
-/** The SQL deployment surface: a session built with GraftExtensions
-  * must expose the custom expressions to plain `spark.sql`, matching
-  * their DataFrame twins.
+/** The SQL deployment surface: a session built by `GraftSession.create`
+  * carries GraftExtensions, so plain `spark.sql` sees the custom
+  * expressions, matching their DataFrame twins. `graft_heavy_hitters`
+  * has no lazy registration path, so its SQL lane alone proves the
+  * extension is installed.
   */
 class GraftExtensionsSpec extends SparkTestBase {
 
-  /** A sibling session ON THE SAME SparkContext with the extensions
-    * applied (getOrCreate would silently return the shared test
-    * session and skip extension wiring — clearing active/default
-    * forces a genuine new session).
-    */
-  private def withExtensionSession[A](f: SparkSession => A): A = {
-    val base = spark // force-init the shared context first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      try f(s)
-      finally { SparkSession.clearActiveSession(); SparkSession.clearDefaultSession() }
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
-  }
-
   test("graft_dot / graft_normalize / graft_heavy_hitters work from plain SQL") {
-    withExtensionSession { s =>
-      val dot = s.sql(
-        "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))").head.getDouble(0)
-      assert(dot == 11.0)
-      val norm = s.sql("SELECT graft_normalize('  A\tB  c ')").head.getString(0)
-      assert(norm == "a b c")
-      val hh = s.sql(
-        """SELECT graft_heavy_hitters(x, 2) FROM VALUES
-          |('a'),('a'),('a'),('b'),('c') AS t(x)""".stripMargin)
-        .head.getSeq[org.apache.spark.sql.Row](0)
-      assert(hh.map(_.getString(0)).contains("a"))
-    }
+    val dot = spark.sql(
+      "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))").head.getDouble(0)
+    assert(dot == 11.0)
+    val norm = spark.sql("SELECT graft_normalize('  A\tB  c ')").head.getString(0)
+    assert(norm == "a b c")
+    val hh = spark.sql(
+      """SELECT graft_heavy_hitters(x, 2) FROM VALUES
+        |('a'),('a'),('a'),('b'),('c') AS t(x)""".stripMargin)
+      .head.getSeq[org.apache.spark.sql.Row](0)
+    assert(hh.map(_.getString(0)).contains("a"))
   }
 
   test("non-literal k is rejected loudly") {
-    withExtensionSession { s =>
-      val e = intercept[Exception] {
-        s.sql("SELECT graft_heavy_hitters(x, CAST(x AS INT)) FROM VALUES ('1') AS t(x)")
-          .collect()
-      }
-      assert(e.getMessage.contains("literal"))
+    val e = intercept[Exception] {
+      spark.sql("SELECT graft_heavy_hitters(x, CAST(x AS INT)) FROM VALUES ('1') AS t(x)")
+        .collect()
     }
+    assert(e.getMessage.contains("literal"))
   }
 }
