@@ -6,7 +6,9 @@ import java.util.UUID
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.config.{SourceConfig, SourceType}
 import graft.quality.QualityChecks
@@ -41,6 +43,13 @@ final case class RunReport(
     outputPath: Option[String],
     warehouseTable: Option[String],
     quarantinedCount: Long = 0L)
+
+/** What [[PipelineRunner.runTransform]] did: row counts from the write's
+  * `observe()` metrics and the schema of the frame it wrote (partition
+  * columns included).
+  */
+final case class TransformResult(
+    inputCount: Long, outputCount: Long, quarantined: Long, schema: StructType)
 
 object Retry {
   /** O3: attempts × exponential backoff (workflow_definition.json:50-57;
@@ -85,12 +94,14 @@ object PipelineRunner {
     * always reflects the latest landing's inferred schema (crawler
     * re-run semantics). CSV keeps the untyped header=true contract of
     * [[graft.sources.SourceReader.read]] (inference reads only the
-    * header line). Scale note: JSON registration infers by scanning
-    * the zone — fine for per-run landings (one pass over data that is
-    * about to be read anyway), but a petabyte-scale accumulated raw
-    * zone should register with an explicit schema or a sampled
-    * inference (`samplingRatio`), exactly as Glue crawlers sample
-    * rather than scan; parquet/orc read footers only.
+    * header line). [[run]] reads the source with the schema this
+    * registration stored, so its inference is the only one a run pays.
+    * Scale note: JSON registration infers by scanning the zone — fine
+    * for per-run landings (one pass over data that is about to be read
+    * anyway), but a petabyte-scale accumulated raw zone should register
+    * with an explicit schema or a sampled inference (`samplingRatio`),
+    * exactly as Glue crawlers sample rather than scan; parquet/orc read
+    * footers only.
     */
   def registerRawZone(
       spark: SparkSession, sourceName: String,
@@ -133,6 +144,10 @@ object PipelineRunner {
     * reference re-executes the whole plan twice for its counts AND reads
     * both from the post-transform df, transform_data.py:234-238; both
     * fixed here).
+    *
+    * `sourceSchema`, when known (the raw zone's registered schema), is
+    * given to the plain reader so it does not infer it again; the
+    * error-tolerant reader always infers.
     */
   def runTransform(
       spark: SparkSession,
@@ -140,7 +155,8 @@ object PipelineRunner {
       ctx: PipelineContext,
       inputPath: String,
       outputPath: String,
-      dataFormat: String): (Long, Long, Long) = {
+      dataFormat: String,
+      sourceSchema: Option[StructType] = None): TransformResult = {
     val inObs = org.apache.spark.sql.Observation()
     val outObs = org.apache.spark.sql.Observation()
     // max_errors in the config turns on the MAXERROR-style corrupt-record
@@ -153,7 +169,7 @@ object PipelineRunner {
     }
     try {
       val source = tolerant.map(_.data)
-        .getOrElse(SourceReader.read(spark, dataFormat, inputPath))
+        .getOrElse(SourceReader.read(spark, dataFormat, inputPath, sourceSchema))
       val raw = source.observe(inObs, count(lit(1)).as("n"))
       val processed = cfg.destination.processed
       val partitionBy = processed.map(_.partitionBy).getOrElse(Nil)
@@ -182,8 +198,28 @@ object PipelineRunner {
         }
         tr.corruptCount
       }.getOrElse(0L)
-      (inObs.get("n").asInstanceOf[Long], outObs.get("n").asInstanceOf[Long], quarantined)
+      TransformResult(inObs.get("n").asInstanceOf[Long], outObs.get("n").asInstanceOf[Long],
+        quarantined, transformed.schema)
     } finally tolerant.foreach(_.unpersist())
+  }
+
+  /** The written output, read back for quality and publish. Parquet
+    * footers hold exactly the schema the write used, so the reader is
+    * given that schema minus the partition columns instead of running
+    * an inference job to re-learn it; partition discovery still types
+    * the partition columns from the directory names, as inference
+    * would. Other formats infer as before (json/csv do not round-trip
+    * types).
+    */
+  private[orchestrate] def readBack(
+      spark: SparkSession, outputPath: String, format: String,
+      writtenSchema: StructType, partitionBy: Seq[String]): DataFrame = {
+    val reader = spark.read.format(format)
+    if (format.equalsIgnoreCase("parquet")) {
+      val resolver = spark.sessionState.conf.resolver
+      reader.schema(StructType(writtenSchema.filterNot(f =>
+        partitionBy.exists(resolver(_, f.name))))).load(outputPath)
+    } else reader.load(outputPath)
   }
 
   /** Full pipeline run (§3 entry point 1): branch → transform → quality
@@ -203,18 +239,24 @@ object PipelineRunner {
       val fmt = if (dataFormat.nonEmpty) dataFormat else cfg.schema.inputFormat
       // O5: the raw zone becomes a named catalog table BEFORE transform,
       // exactly where the reference's crawler step sits in the workflow.
-      registerRawZone(spark, cfg.name, inputPath, fmt)
+      val raw = registerRawZone(spark, cfg.name, inputPath, fmt)
+      // The catalog holds the schema the registration inferred. It is
+      // empty when Spark defers inference to read time (data columns
+      // overlapping partition directories); the reader infers then.
+      val rawSchema = Some(spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(raw)).schema).filter(_.nonEmpty)
       // O2: branch on source type — api/email sources are expected to be
       // already landed at inputPath by their ingest stage (the reference
       // marks email/file/stream as landed passthroughs, workflow:67-81).
-      val (inCount, outCount, quarantined) = Retry.withBackoff(
+      val TransformResult(inCount, outCount, quarantined, writtenSchema) = Retry.withBackoff(
         cfg.api.map(_.retry.attempts).getOrElse(1),
         cfg.api.map(_.retry.baseSeconds).getOrElse(1.0)) {
-        runTransform(spark, cfg, ctx, inputPath, outputPath, fmt)
+        runTransform(spark, cfg, ctx, inputPath, outputPath, fmt, rawSchema)
       }
 
-      val written = spark.read.format(
-        cfg.destination.processed.map(_.format).getOrElse("parquet")).load(outputPath)
+      val processed = cfg.destination.processed
+      val written = readBack(spark, outputPath, processed.map(_.format).getOrElse("parquet"),
+        writtenSchema, processed.map(_.partitionBy).getOrElse(Nil))
       val quality = QualityChecks.run(written, cfg.qualityChecks)
 
       // error_count covers both filtered rows and parse rejects, so a

@@ -8,11 +8,15 @@ import graft.config.{MetricSpec, QualityCheck}
 /** Data-quality checks (SURVEY F2-F4; sample_source.yaml:85-95) and
   * threshold monitors (F6; sample_source.yaml:98-107).
   *
-  * Scale design: all not_null and regex checks for a run are evaluated
-  * in ONE aggregate pass over the data (a single job, map-side partial
-  * aggregation); each unique check is its own groupBy (it genuinely
-  * needs a shuffle on its key set). No collect of row data — only the
-  * per-check violation counts come back to the driver.
+  * Scale design: every check of a run is evaluated by ONE action. With
+  * no unique check it is a single global aggregate (map-side partial
+  * aggregation). Otherwise it is one keyed aggregate — a plain groupBy
+  * for one distinct key set, GROUPING SETS tagged by `grouping_id()`
+  * for several — whose groups carry the row count and every not_null
+  * and regex check's conditional count, folded by one global aggregate
+  * into the totals and, per key set, the count of keys seen more than
+  * once. No collect of row data — only the per-check violation counts
+  * come back to the driver.
   *
   * Null contract: a NULL value violates `not_null`, never `regex` —
   * regex evaluates only present values (SQL `rlike` three-valued
@@ -31,32 +35,58 @@ object QualityChecks {
   def run(df: DataFrame, checks: Seq[QualityCheck]): QualityReport = {
     val scalarChecks = checks.filter(c => c.kind == "not_null" || c.kind == "regex")
     val uniqueChecks = checks.filter(_.kind == "unique")
-
-    // One pass: row count + every scalar check as a conditional count.
-    val aggs = count(lit(1)).as("__rows") +: scalarChecks.zipWithIndex.map {
-      case (c, i) =>
-        val viol = c.kind match {
-          case "not_null" =>
-            c.columns.map(col(_).isNull).reduce(_ || _)
-          case "regex" =>
-            val target = c.columns.head
-            col(target).isNotNull && !col(target).rlike(c.pattern.getOrElse(".*"))
-        }
-        count(when(viol, 1)).as(s"__c$i")
+    val scalarCounts = scalarChecks.zipWithIndex.map { case (c, i) =>
+      count(when(violation(c), 1)).as(s"__c$i")
     }
-    val row: Row = df.agg(aggs.head, aggs.tail: _*).head()
+    // Key sets that name the same columns are one grouping set: GROUPING
+    // SETS would otherwise expand every row into both copies.
+    val norm: String => String =
+      if (df.sparkSession.sessionState.conf.caseSensitiveAnalysis) identity else _.toLowerCase
+    val keyOf = (c: QualityCheck) => c.columns.map(norm).toSet
+    val keySets = uniqueChecks.map(keyOf).distinct
+
+    val row: Row = keySets match {
+      case Seq() =>
+        df.agg(count(lit(1)).as("__rows"), scalarCounts: _*).head()
+      case _ =>
+        // Each group carries its size and its scalar counts; the fold
+        // sums them over one key set (every row lands in each set once)
+        // and counts each set's groups of more than one row.
+        val (groups, inSet) = keySets match {
+          case Seq(keys) =>
+            (df.groupBy(keys.toSeq.map(col): _*)
+              .agg(count(lit(1)).as("__n"), scalarCounts: _*), (_: Int) => lit(true))
+          case _ =>
+            val all = keySets.flatten.distinct
+            // grouping_id(): bit set, most significant first, for each
+            // column the grouping set leaves out.
+            val gid = keySets.map(keys =>
+              all.foldLeft(0L)((acc, c) => acc << 1 | (if (keys(c)) 0L else 1L)))
+            (df.groupingSets(keySets.map(_.toSeq.map(col)), all.map(col): _*)
+              .agg(grouping_id().as("__g"), count(lit(1)).as("__n") +: scalarCounts: _*),
+              (k: Int) => col("__g") === gid(k))
+        }
+        val folded = (col("__n") +: scalarChecks.indices.map(i => col(s"__c$i"))).map(c =>
+          coalesce(sum(when(inSet(0), c)), lit(0L))) ++
+          keySets.indices.map(k => count(when(inSet(k) && col("__n") > 1, 1)))
+        groups.agg(folded.head, folded.tail: _*).head()
+    }
     val rowCount = row.getLong(0)
     val scalarResults = scalarChecks.zipWithIndex.map { case (c, i) =>
       CheckResult(c, row.getLong(i + 1))
     }
-
     val uniqueResults = uniqueChecks.map { c =>
-      val dupKeys = df.groupBy(c.columns.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).count()
-      CheckResult(c, dupKeys)
+      CheckResult(c, row.getLong(1 + scalarChecks.size + keySets.indexOf(keyOf(c))))
     }
-
     QualityReport(rowCount, scalarResults ++ uniqueResults)
+  }
+
+  /** A NULL value violates `not_null`, never `regex`. */
+  private def violation(c: QualityCheck): Column = c.kind match {
+    case "not_null" => c.columns.map(col(_).isNull).reduce(_ || _)
+    case "regex" =>
+      val target = c.columns.head
+      col(target).isNotNull && !col(target).rlike(c.pattern.getOrElse(".*"))
   }
 
   /** Rows violating any check — the quarantine split (violations go to a
@@ -64,12 +94,7 @@ object QualityChecks {
     * 2nd..nth copies per duplicated key.
     */
   def quarantine(df: DataFrame, checks: Seq[QualityCheck]): DataFrame = {
-    val scalarViol = checks.collect {
-      case c if c.kind == "not_null" => c.columns.map(col(_).isNull).reduce(_ || _)
-      case c if c.kind == "regex" =>
-        val t = c.columns.head
-        col(t).isNotNull && !col(t).rlike(c.pattern.getOrElse(".*"))
-    }
+    val scalarViol = checks.filter(c => c.kind == "not_null" || c.kind == "regex").map(violation)
     val base = if (scalarViol.nonEmpty) df.filter(scalarViol.reduce(_ || _))
                else df.limit(0)
     checks.filter(_.kind == "unique").foldLeft(base) { (acc, c) =>

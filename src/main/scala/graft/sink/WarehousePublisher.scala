@@ -1,6 +1,11 @@
 package graft.sink
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
 import org.apache.spark.sql.functions.{coalesce, col, concat_ws, count, lit, md5, when}
 
 import graft.config.WarehouseConfig
@@ -51,15 +56,47 @@ object WarehousePublisher {
 
   /** Physical versions of `target` only: names that are not exactly
     * `<target>_v<digits>` (views, sibling targets, backups) are
-    * ignored, never matched-on-error.
+    * ignored, never matched-on-error. Reads catalog metadata only
+    * (`spark.catalog.listTables()` would run a Spark job per call).
     */
-  private def versionsOf(spark: SparkSession, target: String): Seq[(String, Long)] =
-    spark.catalog.listTables().collect().toSeq.flatMap { t =>
-      t.name.toLowerCase match {
-        case VersionRe(base, v) if base == target.toLowerCase => Some((t.name, v.toLong))
+  private def versionsOf(spark: SparkSession, target: String): Seq[(String, Long)] = {
+    val catalog = spark.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase).flatMap { t =>
+      t.table.toLowerCase match {
+        case VersionRe(base, v) if base == target.toLowerCase => Some((t.table, v.toLong))
         case _ => None
       }
     }
+  }
+
+  /** Rows and bytes of the data files a Parquet table committed, read
+    * on the driver from the file listing and the footers — no Spark
+    * job, and still a read-back of what was committed. The file rule
+    * is ANALYZE's: names starting with `_` or `.` are not data. None
+    * for any other provider.
+    *
+    * Scale note: one footer read per file, serially; a table of many
+    * thousands of files would want them read in parallel.
+    */
+  private def committedParquet(spark: SparkSession, phys: String): Option[CatalogStatistics] = {
+    val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(phys))
+    if (!meta.provider.exists(_.equalsIgnoreCase("parquet"))) return None
+    val root = new Path(meta.location)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    def dataFiles(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .flatMap(dataFiles)
+    val files = dataFiles(fs.getFileStatus(root))
+    val rows = files.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+    Some(CatalogStatistics(sizeInBytes = BigInt(files.map(_.getLen).sum),
+      rowCount = Some(BigInt(rows))))
+  }
 
   /** Raised by the K7 schema gate: the incoming frame dropped or
     * retyped columns of the currently published version and the config
@@ -142,7 +179,12 @@ object WarehousePublisher {
     try {
       reclaimOrphanLocation(spark, phys)
       shaped.write.mode(SaveMode.Overwrite).saveAsTable(phys)
-      val loaded = spark.table(phys).count() // K7-style verification read
+      // K7-style verification: read back what was committed — the
+      // footer row counts of the files under the table's location
+      // (a job-free read); a non-Parquet provider counts a scan.
+      val committed = committedParquet(spark, phys)
+      val loaded = committed.flatMap(_.rowCount).map(_.toLong)
+        .getOrElse(spark.table(phys).count())
       if (properties.nonEmpty) {
         val kvs = properties.map { case (k, v) =>
           s"'${k.replace("'", "''")}'='${v.replace("'", "''")}'"
@@ -161,7 +203,7 @@ object WarehousePublisher {
       }.foreach { case (name, _) =>
         spark.sql(s"DROP TABLE IF EXISTS $name")
       }
-      val analyzed = maintain(spark, cfg, target, phys)
+      val analyzed = maintain(spark, cfg, target, phys, committed)
       PublishResult(target, loaded, analyzed, version)
     } catch {
       case e: Throwable =>
@@ -192,9 +234,16 @@ object WarehousePublisher {
     * rewrites into the next version and re-points the view, so even
     * compaction never interrupts readers. Triggered only under
     * `vacuum_strategy: full` to keep `auto` cheap.
+    *
+    * When the analyzed table is the version just written and its
+    * footers were read (`committed`), the statistics ANALYZE would
+    * compute — total data-file bytes and row count — are already known
+    * and are written directly; a compacted copy or a non-Parquet
+    * version runs ANALYZE.
     */
   private def maintain(
-      spark: SparkSession, cfg: WarehouseConfig, target: String, phys: String): Boolean = {
+      spark: SparkSession, cfg: WarehouseConfig, target: String, phys: String,
+      committed: Option[CatalogStatistics]): Boolean = {
     var current = phys
     if (cfg.vacuumStrategy == "full") {
       val compacted = spark.table(phys).coalesce(
@@ -213,7 +262,11 @@ object WarehousePublisher {
         .foreach { case (name, _) => spark.sql(s"DROP TABLE IF EXISTS $name") }
     }
     if (cfg.analyze) {
-      spark.sql(s"ANALYZE TABLE $current COMPUTE STATISTICS")
+      committed.filter(_ => current == phys) match {
+        case Some(stats) =>
+          spark.sessionState.catalog.alterTableStats(TableIdentifier(phys), Some(stats))
+        case None => spark.sql(s"ANALYZE TABLE $current COMPUTE STATISTICS")
+      }
       true
     } else false
   }

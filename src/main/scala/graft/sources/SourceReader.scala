@@ -12,17 +12,24 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    casts are explicit config transformations, never reader magic;
   *  - Parquet: native scan (pushdown + pruning built in);
   *  - unknown format → error (the reference raises ValueError).
+  *
+  * A known `schema` (one an earlier inference over the same files
+  * produced) skips the inference; it must be that schema, since a
+  * declared one changes what JSON and CSV parse.
   */
 object SourceReader {
-  def read(spark: SparkSession, format: String, path: String): DataFrame =
+  def read(spark: SparkSession, format: String, path: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val reader = schema.fold(spark.read)(spark.read.schema)
     format.toLowerCase match {
-      case "json"    => spark.read.json(path)
-      case "csv"     => spark.read.option("header", "true").csv(path)
-      case "parquet" => spark.read.parquet(path)
-      case "orc"     => spark.read.orc(path)
+      case "json"    => reader.json(path)
+      case "csv"     => reader.option("header", "true").csv(path)
+      case "parquet" => reader.parquet(path)
+      case "orc"     => reader.orc(path)
       case other =>
         throw new IllegalArgumentException(s"Unsupported data format: $other")
     }
+  }
 
   /** Parquet scan with schema evolution: `mergeSchema` unions the
     * footers of all files, so columns added over time surface as

@@ -279,6 +279,66 @@ class PublisherSpec extends SparkTestBase {
     assert(spark.table("pubspec_orphan").collect().map(_.getInt(0)).toSeq == Seq(1))
   }
 
+  private def stats(table: String) = spark.sessionState.catalog
+    .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table)).stats
+
+  /** Stats now on `table`, then the stats a fresh ANALYZE writes. */
+  private def statsThenAnalyzed(table: String) = {
+    val before = stats(table)
+    spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS")
+    (before, stats(table))
+  }
+
+  test("K7 footer verification: rowsLoaded equals a count of the committed table") {
+    val cfg = WarehouseConfig(schema = "pubspec", table = "footer", distkey = Some("k"),
+      analyze = false)
+    val r = WarehousePublisher.publish(spark,
+      Seq.tabulate(37)(i => (i % 5, s"v$i")).toDF("k", "v"), cfg)
+    assert(r.rowsLoaded == 37)
+    assert(r.rowsLoaded == spark.table(s"pubspec_footer_v${r.version}").count())
+  }
+
+  test("analyze: the written statistics equal those a following ANALYZE writes") {
+    val cfg = WarehouseConfig(schema = "pubspec", table = "stats", distkey = Some("k"),
+      sortkey = Seq("v"), analyze = true)
+    val r = WarehousePublisher.publish(spark,
+      Seq.tabulate(120)(i => (i % 7, s"v$i")).toDF("k", "v"), cfg)
+    assert(r.analyzed)
+    val (written, analyzed) = statsThenAnalyzed(s"pubspec_stats_v${r.version}")
+    assert(written.flatMap(_.rowCount).contains(BigInt(120)))
+    assert(written == analyzed)
+  }
+
+  test("vacuum_strategy full: the compacted copy is analyzed with correct stats") {
+    val cfg = WarehouseConfig(schema = "pubspec", table = "vacstats",
+      vacuumStrategy = "full", analyze = true)
+    val r = WarehousePublisher.publish(spark,
+      Seq.tabulate(50)(i => (i, s"v$i")).toDF("k", "v"), cfg)
+    assert(r.analyzed && r.rowsLoaded == 50)
+    val current = WarehousePublisher.currentVersion(spark, "pubspec_vacstats")
+    assert(current > r.version) // the view points at the compacted copy
+    val (written, analyzed) = statsThenAnalyzed(s"pubspec_vacstats_v$current")
+    assert(written.flatMap(_.rowCount).contains(BigInt(50)))
+    assert(written == analyzed)
+  }
+
+  test("a non-Parquet provider falls back to the counted verification") {
+    val cfg = WarehouseConfig(schema = "pubspec", table = "orcpub", analyze = true)
+    spark.conf.set("spark.sql.sources.default", "orc")
+    val r = try WarehousePublisher.publish(spark,
+        Seq.tabulate(9)(i => (i, s"v$i")).toDF("k", "v"), cfg)
+      finally spark.conf.unset("spark.sql.sources.default")
+    val phys = s"pubspec_orcpub_v${r.version}"
+    assert(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(phys))
+      .provider.contains("orc"))
+    assert(r.rowsLoaded == 9 && r.analyzed)
+    assert(spark.table("pubspec_orcpub").count() == 9)
+    val (written, analyzed) = statsThenAnalyzed(phys)
+    assert(written.flatMap(_.rowCount).contains(BigInt(9)))
+    assert(written == analyzed)
+  }
+
   test("exportTable (UNLOAD) round-trips a published table") {
     val cfg = WarehouseConfig(schema = "pubspec", table = "exp", analyze = false)
     WarehousePublisher.publish(spark, Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), cfg)
