@@ -31,58 +31,45 @@ import org.apache.spark.sql.functions._
   */
 object SeqPack {
 
-  /** Shard assignment over a precomputed token-count column.
-    * `idCol` must be non-negative and unique (the deterministic order
-    * key); ties are impossible, so the running sum is total-ordered.
+  /** Shard assignment over a precomputed token-count column: the
+    * [[startOffsets]] prefix sum with `start div budget` on top. Every
+    * other column of `docs` passes through, so a caller carrying
+    * payload columns needs no join back on the id. `idCol` must be
+    * non-negative (the deterministic order key); with unique ids the
+    * running sum is total-ordered.
     */
   def tokenShards(docs: DataFrame, idCol: String, tokCol: String,
       budget: Long, bucketWidth: Long): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
-    require(bucketWidth >= 1, s"bucketWidth must be >= 1, got $bucketWidth")
-    val bucketed = docs.withColumn("__bucket",
-      floor(col(idCol) / bucketWidth).cast("long"))
-    val wIn = Window.partitionBy(col("__bucket")).orderBy(col(idCol))
-    val inBucket = bucketed.withColumn("__run",
-      sum(col(tokCol).cast("long")).over(wIn))
-    val wOff = Window.orderBy(col("__bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(col("__bucket"))
-      .agg(sum(col(tokCol).cast("long")).as("__tot"))
-      .withColumn("__off", coalesce(sum(col("__tot")).over(wOff), lit(0L)))
-      .select(col("__bucket"), col("__off"))
-    inBucket.join(broadcast(offsets), "__bucket")
-      .withColumn("__start", col("__off") + col("__run") - col(tokCol).cast("long"))
-      .select(col(idCol), col(tokCol).cast("long").as(tokCol),
-        // Integral divide (start offsets are non-negative): a double
-        // division loses exactness once offsets pass 2^53 — inside the
-        // design's corpus ambition; `div` stays exact over the full
-        // long range (SeqPackSpec proves the divergence).
-        expr(s"__start div ${budget}L").as("shard_id"))
+    startOffsets(docs, idCol, tokCol, bucketWidth)
+      // Integral divide (start offsets are non-negative): a double
+      // division loses exactness once offsets pass 2^53 — inside the
+      // design's corpus ambition; `div` stays exact over the full
+      // long range (SeqPackSpec proves the divergence).
+      .select(docs.columns.map(col) :+ expr(s"start div ${budget}L").as("shard_id"): _*)
   }
 
   /** Exclusive corpus start-offset per document — the two-level prefix
-    * sum of [[tokenShards]] steps 1-4, exposed on its own: (idCol,
-    * wCol, start) where `start` is the sum of `wCol` over all ids
-    * before this one. Bit-identical to the global window for any
-    * bucketWidth.
+    * sum, steps 1-4 above: `docs`' columns (wCol cast to long) plus
+    * `start`, the sum of `wCol` over all ids before this one.
+    * Bit-identical to the global window for any bucketWidth.
     */
   def startOffsets(docs: DataFrame, idCol: String, wCol: String,
       bucketWidth: Long): DataFrame = {
     require(bucketWidth >= 1, s"bucketWidth must be >= 1, got $bucketWidth")
-    val bucketed = docs.withColumn("__bucket",
-      floor(col(idCol) / bucketWidth).cast("long"))
+    val bucketed = docs.withColumn(wCol, col(wCol).cast("long"))
+      .withColumn("__bucket", floor(col(idCol) / bucketWidth).cast("long"))
     val wIn = Window.partitionBy(col("__bucket")).orderBy(col(idCol))
-    val inBucket = bucketed.withColumn("__run",
-      sum(col(wCol).cast("long")).over(wIn))
     val wOff = Window.orderBy(col("__bucket"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = bucketed.groupBy(col("__bucket"))
-      .agg(sum(col(wCol).cast("long")).as("__tot"))
+      .agg(sum(col(wCol)).as("__tot"))
       .withColumn("__off", coalesce(sum(col("__tot")).over(wOff), lit(0L)))
       .select(col("__bucket"), col("__off"))
-    inBucket.join(broadcast(offsets), "__bucket")
-      .select(col(idCol), col(wCol).cast("long").as(wCol),
-        (col("__off") + col("__run") - col(wCol).cast("long")).as("start"))
+    bucketed.withColumn("__run", sum(col(wCol)).over(wIn))
+      .join(broadcast(offsets), "__bucket")
+      .select(docs.columns.map(col) :+
+        (col("__off") + col("__run") - col(wCol)).as("start"): _*)
   }
 
   /** Systematic probability-proportional-to-size sampling: lay the

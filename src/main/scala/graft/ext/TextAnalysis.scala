@@ -639,7 +639,7 @@ object TextAnalysis {
     *
     * Scale: per-key counts are one map-side-combined aggregate over the
     * mixture key (cardinality = #languages/#sources — tiny); n_min is
-    * an aggregate of THAT K-row table; the rate table broadcasts and
+    * a window over THAT K-row table; the rate table broadcasts and
     * the gate is map-only. The corpus itself never shuffles.
     *
     * Rows with a NULL mixture key are dropped (inner join on the key):
@@ -657,12 +657,18 @@ object TextAnalysis {
     * shared code, not a re-implementation). `counts` must have columns
     * (keyCol, __n); when it equals docs.groupBy(keyCol).count the
     * result is [[temperatureMix]] exactly.
+    *
+    * `counts` is read ONCE: n_min is `min(__n) over ()` on the count
+    * table itself, not a second aggregate joined back, so the plan
+    * builds the table a single time. That window is single-partition,
+    * but the table has one row per key, so it sorts strata, not
+    * documents.
     */
   def temperatureMixWithCounts(docs: DataFrame, idCol: String,
       keyCol: String, counts: DataFrame): DataFrame = {
-    val nmin = counts.agg(min(col("__n")).as("__nmin"))
+    val rates = counts.withColumn("__nmin", min(col("__n")).over())
     val bucket = pmod(tokenHash(col(idCol).cast("string")), lit(100L))
-    docs.join(broadcast(counts.crossJoin(nmin)), Seq(keyCol))
+    docs.join(broadcast(rates), Seq(keyCol))
       .filter(bucket * bucket * col("__n") < lit(10000L) * col("__nmin"))
       .select(docs.columns.map(col): _*)
   }

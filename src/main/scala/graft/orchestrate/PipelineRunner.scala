@@ -129,6 +129,13 @@ object PipelineRunner {
     lock.synchronized {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       spark.sql(s"CREATE TABLE $tbl USING $fmt$options LOCATION '$inputPath'")
+      // A Hive-partitioned landing (PartitionedWriter.landRaw's
+      // ingest_year=/…/ingest_hour= dirs) registers as a catalog-tracked
+      // partitioned table with NO partitions added, so reading it by
+      // name would see 0 rows. Unpartitioned landings skip the listing.
+      if (spark.sessionState.catalog.getTableMetadata(TableIdentifier(tbl))
+          .partitionColumnNames.nonEmpty)
+        spark.sql(s"ALTER TABLE $tbl RECOVER PARTITIONS")
     }
     tbl
   }

@@ -658,56 +658,14 @@ object NorthStar {
     * composed the way a pretraining pipeline actually runs them:
     * quality gate → exact-dedup survivors → temperature-flattened
     * language mix → 32/8 context-window chunking → 2048-token shard
-    * assignment. One registered query, one oracle, every stage exact —
-    * the composition is the product: each stage's output is the next
-    * stage's input with no materialization between.
-    *
-    * Scale: the gate is map-only (codegen'd regex + barrier column);
-    * dedup shuffles fixed-width digests; the mix is a broadcast gate;
-    * chunking is map-only; sharding is the two-level prefix sum (no
-    * global sort). The only corpus-sized exchanges are the dedup
-    * digest shuffle and the shard-key window's bucket partitioning.
+    * assignment. One registered query, one oracle, every stage exact.
+    * The chain is [[graft.transform.CurationCompiler.compile]] at the
+    * default [[graft.config.CurationConfig]]; `cfg_curation` reaches
+    * the same plan from YAML (its scale shape is documented there).
     */
-  def trainingManifest(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val gated = t(s, dir, "documents")
-      .withColumn("__ntok", qTok.cast("long"))
-      .withColumn("__nstop", qStopFast.cast("double"))
-      .withColumn("__barrier", monotonically_increasing_id())
-      .filter($"__ntok" >= 10 && $"__ntok" <= 5000 &&
-        $"__nstop" / $"__ntok" >= 0.01 && $"__barrier" >= 0)
-      .select($"doc_id", $"text", $"lang")
-    // ONE materialized exchange on the dedup digest: the keep-side
-    // groupBy and the survivor join both consume this __h-keyed
-    // exchange (AQE ReuseExchange; the join co-partitions on the __h
-    // subset of its keys), so the gate + md5 text pass runs once —
-    // the r16 before-plan recomputed it per consumer.
-    val hashed = gated.withColumn("__h", md5($"text".cast("binary")))
-      .repartition($"__h")
-    val keep = hashed.groupBy($"__h").agg(min($"doc_id").as("doc_id"))
-    val survivors = hashed.join(keep, Seq("__h", "doc_id")).drop("__h")
-    val mixed = graft.ext.TextAnalysis.temperatureMix(survivors, "doc_id", "lang")
-    val chunks = graft.ext.TextAnalysis.docChunks(mixed, "doc_id", "text", 32, 8)
-    // Composite (doc, chunk) order key: chunk_id < 2^20 by construction
-    // (a doc would need ~25M tokens at stride 24 to overflow it).
-    // chunk_start is dropped BEFORE the materialization point (project
-    // early, §2.3), and the chunk table materializes through one
-    // __key-keyed exchange: the shard prefix-sum (two consumers) and
-    // the final shard-attach join all reuse it instead of re-running
-    // the whole gate→dedup→mix→chunk text chain (3 recomputations, 36
-    // parquet scans, in the r16 before-plan). Chunk rows are
-    // fixed-width digests+counts — never text — so the exchange moves
-    // strictly lighter bytes than one text re-read.
-    val keyed = chunks
-      .select($"doc_id", $"chunk_id", $"n_chunk_tokens", $"chunk_hash",
-        ($"doc_id" * (1L << 20) + $"chunk_id").as("__key"))
-      .repartition($"__key")
-    val shards = graft.ext.SeqPack.tokenShards(
-      keyed.select($"__key", $"n_chunk_tokens"), "__key", "n_chunk_tokens",
-      2048L, 64L << 20)
-    keyed.join(shards.select($"__key", $"shard_id"), "__key")
-      .select($"doc_id", $"chunk_id", $"n_chunk_tokens", $"chunk_hash", $"shard_id")
-  }
+  def trainingManifest(s: SparkSession, dir: String): DataFrame =
+    graft.transform.CurationCompiler.compile(graft.config.CurationConfig())(
+      t(s, dir, "documents"))
 
   /** C4-style duplicated-span statistics (8-token blocks) —
     * [[graft.ext.TextAnalysis.spanDedupStats]].

@@ -625,7 +625,7 @@ object StreamCuration {
       else emptyDf(spark, chunkSchema(cu))
     val keptChunks = chunkStore
       .join(kept.select(col(cu.idField)), Seq(cu.idField), "left_semi")
-    CurationCompiler.shardJoin(cu)(keptChunks)
+    CurationCompiler.assignShards(cu)(keptChunks)
   }
 
   /** The current incremental output as a DataFrame built from state —

@@ -1,6 +1,7 @@
 package graft.transform
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.config.CurationConfig
@@ -18,14 +19,21 @@ import graft.ext.{SeqPack, TextAnalysis}
   * queries gate ([[TextAnalysis.qualityTokenCount]] /
   * [[TextAnalysis.qualityStopwordCount]], md5 exact dedup,
   * [[TextAnalysis.temperatureMix]], [[TextAnalysis.docChunks]],
-  * [[SeqPack.tokenShards]]) — at default parameters the compiled plan
-  * is the `training_manifest` plan, and the `cfg_curation` registered
-  * query hashes against the same oracle to prove it.
+  * [[SeqPack.tokenShards]]); at default parameters [[compile]] IS the
+  * `training_manifest` query, and the `cfg_curation` registered query
+  * reaches it through YAML against the same oracle.
   *
-  * Scale shape (unchanged from training_manifest): the gate is
-  * map-only codegen'd regex work; dedup shuffles fixed-width digests;
-  * the mix is a broadcast gate; chunking is map-only; sharding is the
-  * two-level prefix sum. No stage materializes between stages.
+  * Scale shape: the gate is map-only codegen'd regex work; dedup is
+  * one window over the md5-digest exchange; the mix is a broadcast
+  * gate; chunking is map-only; sharding is the two-level prefix sum
+  * with the chunk columns carried through. No stage materializes
+  * between stages. Column pruning gives each consumer of a shared
+  * subplan its own projection, and an exchange is reused only between
+  * consumers that need the same columns, so no stage here joins its
+  * own input back. The static plan (AQE off, sf0.001) scans
+  * `documents` twice: once for the survivor stream, once for the mix's
+  * count table (id, lang and digest only). The shard offsets reuse the
+  * survivor stream's digest exchange.
   */
 object CurationCompiler {
 
@@ -37,14 +45,14 @@ object CurationCompiler {
 
     val survivors = cu.dedup match {
       case "exact" =>
-        // One materialized digest exchange feeds the keep-side groupBy
-        // AND the survivor join (AQE ReuseExchange) — the gate + md5
-        // text pass runs once, exactly as in
-        // [[graft.queries.NorthStar.trainingManifest]].
-        val hashed = gated.withColumn("__h", md5(text.cast("binary")))
-          .repartition(col("__h"))
-        val keep = hashed.groupBy(col("__h")).agg(min(id).as(cu.idField))
-        hashed.join(keep, Seq("__h", cu.idField)).drop("__h")
+        // Keep the lowest id per digest with a window over the digest
+        // exchange: the survivors stream straight out of it, where a
+        // keep-side groupBy joined back would be a second consumer
+        // needing other columns — a second gate + md5 text pass.
+        gated.withColumn("__h", md5(text.cast("binary")))
+          .withColumn("__min", min(id).over(Window.partitionBy(col("__h"))))
+          .filter(id === col("__min"))
+          .drop("__h", "__min")
       case "none" => gated
       case other => throw new IllegalArgumentException(
         s"curation.dedup must be 'exact' or 'none', got '$other'")
@@ -54,14 +62,7 @@ object CurationCompiler {
       if (cu.mix) TextAnalysis.temperatureMix(survivors, cu.idField, cu.stratumField)
       else survivors
 
-    // Project chunk_start away and materialize the chunk-metadata table
-    // through one __key exchange: the shard prefix-sum's two consumers
-    // and the shard-attach join all reuse it instead of re-running the
-    // gate→dedup→mix→chunk text chain per consumer (same re-plan as the
-    // Scala twin; the streaming path lands chunks to state instead and
-    // is untouched).
-    shardJoin(cu)(chunksKeyed(cu)(mixed)
-      .drop("chunk_start").repartition(col("__key")))
+    assignShards(cu)(chunksKeyed(cu)(mixed))
   }
 
   /** The quality gate stage of [[compile]] on its own: (id, text,
@@ -96,17 +97,17 @@ object CurationCompiler {
       .withColumn("__key", col(cu.idField) * (1L << 20) + col("chunk_id"))
 
   /** The token-budget shard assignment over keyed chunk METADATA
-    * (needs only __key + n_chunk_tokens — no text): the corpus-global
-    * prefix-sum tail of [[compile]].
+    * (no text): the corpus-global prefix-sum tail of [[compile]]. The
+    * chunk columns ride through [[SeqPack.tokenShards]], so there is
+    * no join back on `__key`; a chunk row repeated n times (a
+    * duplicated id) comes out n times.
     */
-  def shardJoin(cu: CurationConfig)(keyed: DataFrame): DataFrame = {
-    val shards = SeqPack.tokenShards(
-      keyed.select(col("__key"), col("n_chunk_tokens")),
-      "__key", "n_chunk_tokens", cu.shardBudget, cu.shardBucketWidth)
-    keyed.join(shards.select(col("__key"), col("shard_id")), "__key")
-      .select(col(cu.idField), col("chunk_id"), col("n_chunk_tokens"),
-        col("chunk_hash"), col("shard_id"))
-  }
+  def assignShards(cu: CurationConfig)(keyed: DataFrame): DataFrame =
+    SeqPack.tokenShards(
+        keyed.select(col(cu.idField), col("chunk_id"), col("n_chunk_tokens"),
+          col("chunk_hash"), col("__key")),
+        "__key", "n_chunk_tokens", cu.shardBudget, cu.shardBucketWidth)
+      .drop("__key")
 
   /** Compiles a `curation.semantic_dedup:` section onto the SemDeDup
     * operators ([[graft.ext.SimSearch.semanticDedup]] /

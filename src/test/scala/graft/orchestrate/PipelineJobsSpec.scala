@@ -15,7 +15,8 @@ import graft.transform.TransformPipeline
 /** The Spark-job budget of one `PipelineRunner.run(publish = true)`:
   * one source inference, the partitioned write, one quality action and
   * the distkey/sortkey copy — at most 8 jobs. Also pins that the
-  * schema-known read-back equals the inferred one.
+  * schema-known read-back equals the inferred one, and that a
+  * partitioned raw landing reads back by table name.
   */
 class PipelineJobsSpec extends SparkTestBase {
 
@@ -129,5 +130,15 @@ class PipelineJobsSpec extends SparkTestBase {
         .schema == inferred)
       assert(spark.table(s"jobs_${cfg.name}").schema == inferred)
     }
+  }
+
+  test("a Hive-partitioned raw landing registers with its partitions readable by name") {
+    val s = spark; import s.implicits._
+    val landing = Files.createTempDirectory("graft-raw-partitioned").resolve("landing")
+    graft.sink.PartitionedWriter.landRaw(
+      Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"), landing.toString, Start)
+    val tbl = PipelineRunner.registerRawZone(spark, "partitioned_landing",
+      landing.toString, "json")
+    assert(spark.table(tbl).count() == 3)
   }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
@@ -114,7 +114,19 @@ class PlanGuardSpec extends SparkTestBase {
     ("price_deciles", 7, 2),
     ("profile_table_exact", 8, 0),
     ("video_frames", 0, 0),
-    ("q18_bigorders", 1, 2))
+    ("q18_bigorders", 1, 2),
+    // The curation chain (training_manifest = cfg_curation) runs each
+    // shared subplan once: dedup is one window over the digest
+    // exchange, the mix reads its count table once (n_min as a window
+    // on it), and the shard prefix sum carries the chunk columns
+    // through instead of joining them back on __key. Shuffles: the
+    // digest exchange of the survivor stream and of the count table's
+    // input, the count aggregate, its n_min window, the bucket window,
+    // the bucket-total aggregate and its offset window. Broadcasts: the
+    // mix's rate table and the bucket offsets. Before: (14, 4).
+    ("training_manifest", 7, 2),
+    ("cfg_curation", 7, 2),
+    ("temperature_mix", 2, 1))
 
   test("exchange counts of the most expensive bench queries are pinned") {
     val actual = pinned.map { case (name, _, _) =>
@@ -149,5 +161,18 @@ class PlanGuardSpec extends SparkTestBase {
       assert(reused.nonEmpty,
         s"$name lost its shared materialized exchange (ReusedExchange):\n$plan")
     }
+  }
+
+  test("training_manifest scans documents.text at most twice in its static plan") {
+    val plan = expand(graft.SparkEntry.queries("training_manifest")(staticSession, sf0001)
+      .queryExecution.executedPlan)
+    val textScans = plan.collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains("documents")) &&
+            f.requiredSchema.fieldNames.contains("text") => f
+    }
+    // One scan feeds the survivor stream, one the mix's count table;
+    // every other consumer is a ReusedExchange (4 scans before).
+    assert(textScans.size <= 2, s"${textScans.size} documents.text scans:\n$plan")
   }
 }

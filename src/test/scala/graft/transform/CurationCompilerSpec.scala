@@ -1,11 +1,16 @@
 package graft.transform
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkTestBase
-import graft.config.ConfigLoader
+import graft.config.{ConfigLoader, CurationConfig}
+import graft.ext.{SeqPack, TextAnalysis}
 
 /** The config-DSL curation section: YAML parsing (field lift +
-  * defaults) and the compiled plan's equality with the Scala-composed
-  * training_manifest on the fixture corpus.
+  * defaults), the compiled chain's equality with an independent
+  * reference formulation on the fixture corpus, and its row
+  * multiplicity when ids repeat.
   */
 class CurationCompilerSpec extends SparkTestBase {
 
@@ -35,11 +40,77 @@ class CurationCompilerSpec extends SparkTestBase {
   }
 
   test("config-compiled pipeline equals the Scala-composed training_manifest") {
-    val got = graft.queries.Pipeline.cfgCuration(spark, sf0001)
-      .collect().map(_.toSeq).toSet
-    val want = graft.queries.NorthStar.queries("training_manifest")(spark, sf0001)
-      .collect().map(_.toSeq).toSet
+    val got = multiset(graft.queries.Pipeline.cfgCuration(spark, sf0001))
+    val want = multiset(graft.queries.NorthStar.queries("training_manifest")(spark, sf0001))
     assert(got == want && got.nonEmpty)
+  }
+
+  /** Rows with their multiplicities. */
+  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  private def documents: DataFrame = graft.Tables.t(spark, sf0001, "documents")
+
+  /** An independent formulation of the default curation chain: a
+    * keep-side groupBy joined back on (__h, id), n_min as its own
+    * aggregate cross-joined onto the counts, and shard ids computed on
+    * (__key, n_chunk_tokens) alone and joined back on __key.
+    */
+  private def referenceChain(docs: DataFrame): DataFrame = {
+    val cu = CurationConfig()
+    val hashed = CurationCompiler.gate(cu)(docs)
+      .withColumn("__h", md5(col("text").cast("binary")))
+    val keep = hashed.groupBy(col("__h")).agg(min(col("doc_id")).as("doc_id"))
+    val survivors = hashed.join(keep, Seq("__h", "doc_id")).drop("__h")
+    val counts = survivors.groupBy(col("lang")).agg(count(lit(1)).as("__n"))
+    val nmin = counts.agg(min(col("__n")).as("__nmin"))
+    val bucket = pmod(TextAnalysis.tokenHash(col("doc_id").cast("string")), lit(100L))
+    val mixed = survivors.join(broadcast(counts.crossJoin(nmin)), Seq("lang"))
+      .filter(bucket * bucket * col("__n") < lit(10000L) * col("__nmin"))
+      .select(survivors.columns.map(col): _*)
+    val keyed = CurationCompiler.chunksKeyed(cu)(mixed)
+    val shards = SeqPack.tokenShards(keyed.select(col("__key"), col("n_chunk_tokens")),
+      "__key", "n_chunk_tokens", cu.shardBudget, cu.shardBucketWidth)
+    keyed.join(shards.select(col("__key"), col("shard_id")), "__key")
+      .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens"),
+        col("chunk_hash"), col("shard_id"))
+  }
+
+  test("compiled chain equals the independent reference chain as a multiset") {
+    val got = multiset(CurationCompiler.compile(CurationConfig())(documents))
+    val want = multiset(referenceChain(documents))
+    assert(got.nonEmpty && got.values.forall(_ == 1))
+    assert(got == want)
+  }
+
+  // Duplicated ids: the compiled chain emits each surviving input row's
+  // chunks once; the reference's __key join-back emits a chunk of an id
+  // carried by n surviving rows n² times. The distinct rows agree.
+  test("duplicated (id, text) rows: each copy's chunks appear once") {
+    val dup = documents.filter(col("doc_id") % 11 === 0)
+    val docs = documents.unionByName(dup)
+    val copies = multiset(docs.select(col("doc_id"))).map { case (k, n) => k.head -> n }
+    val got = multiset(CurationCompiler.compile(CurationConfig())(docs))
+    val want = multiset(referenceChain(docs))
+    assert(got.keySet == want.keySet)
+    assert(got.forall { case (row, n) => n == copies(row.head) })
+    assert(got.exists(_._2 == 2), "no duplicated id survived the chain")
+    assert(want.forall { case (row, n) => n == copies(row.head) * copies(row.head) })
+  }
+
+  test("ids reused with other text: every chunk row appears once") {
+    // Five surviving ids each gain a second row with other text: their
+    // own tokens reversed — same gate and mix decision, another digest.
+    val ids = multiset(CurationCompiler.compile(CurationConfig())(documents))
+      .keys.map(_.head.asInstanceOf[Long]).toSeq.distinct.sorted.take(5)
+    val reused = documents.filter(col("doc_id").isin(ids: _*))
+      .withColumn("text", array_join(reverse(split(trim(col("text")), "\\s+")), " "))
+    val docs = documents.unionByName(reused)
+    val got = multiset(CurationCompiler.compile(CurationConfig())(docs))
+    val want = multiset(referenceChain(docs))
+    assert(got.keySet == want.keySet)
+    assert(got.values.forall(_ == 1))
+    assert(want.values.sum > got.values.sum, "no reused id kept both rows")
   }
 
   test("semantic_dedup / decontam sections parse with declared values and defaults") {
