@@ -20,23 +20,31 @@ object Tables {
     */
   def pathTag(dir: String): String = "sf_" + dir.replaceAll("[^A-Za-z0-9]", "_")
 
-  private val landed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val landed =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[Unit]]()
 
   /** Build-once guard for landed scratch artifacts (PQ/q8 codes,
     * trained centroids, partitioned layouts): the first caller per
     * JVM runs `build` (which must WRITE `path`), everyone else just
-    * reads. On a failed build the path is removed from the set so a
-    * later call can retry instead of reading a missing/partial
-    * artifact for the rest of the JVM. Callers are the sequential
-    * Bench/Verify query loops; racing first-calls of the SAME path are
-    * not defended (the second would read mid-write) — same contract as
-    * the inline pattern this replaces.
+    * reads. Single-flight: a caller racing the first one blocks until
+    * the build is done, so no caller returns while `path` is
+    * mid-write. The build runs outside the map's `computeIfAbsent`,
+    * because builds nest (a landing may land another path). A failed
+    * build throws to every caller waiting on it and removes its own
+    * entry, so a later call retries instead of reading a
+    * missing/partial artifact for the rest of the JVM.
     */
-  def landOnce(path: String)(build: => Unit): Unit =
-    if (landed.add(path)) {
-      try build
-      catch { case e: Throwable => landed.remove(path); throw e }
+  def landOnce(path: String)(build: => Unit): Unit = {
+    val entry = landed.computeIfAbsent(path,
+      _ => new java.util.concurrent.FutureTask[Unit](() => build))
+    entry.run() // a no-op unless this caller is the first to force it
+    try entry.get()
+    catch {
+      case e: java.util.concurrent.ExecutionException =>
+        landed.remove(path, entry)
+        throw e.getCause
     }
+  }
 
   /** Resolved-relation cache, keyed by (session, path) — the engine's
     * stand-in for a metastore catalog: `spark.read.parquet` re-runs

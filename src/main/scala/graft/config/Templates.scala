@@ -30,9 +30,6 @@ final class TemplateResolver(
       scala.util.matching.Regex.quoteReplacement(resolved)
     })
 
-  def resolveMap(m: Map[String, String]): Map[String, String] =
-    m.map { case (k, v) => k -> resolve(v) }
-
   private def fail(kind: String, name: String): Nothing =
     throw new NoSuchElementException(s"Unresolvable template $${$kind:$name}")
 }

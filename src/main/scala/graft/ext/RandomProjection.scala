@@ -117,20 +117,6 @@ object RandomProjection {
   def topKFromArrays(arrays: DataFrame, queryBound: Int): DataFrame =
     topKOverVecs(arrays, queryBound)
 
-  /** [[topK]] over a LANDED long-format reduced index ([[reduce]]'s
-    * output): one pivot of the (N × outDim)-row index back to vectors,
-    * then the brute shape. Kept for long-format consumers; the landed
-    * index itself is array-format precisely to avoid this pivot.
-    */
-  def topKFromReduced(reduced: DataFrame, queryBound: Int): DataFrame =
-    topKOverVecs(
-      reduced
-        .groupBy(col("vec_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("comp")))),
-          e => e.getField("comp").cast("double")).as("__r")),
-      queryBound)
-
   private def topKOverVecs(vecs: DataFrame, queryBound: Int): DataFrame = {
     val ndot = graft.functions.DotProduct.fn(vecs.sparkSession)
     val z = vecs

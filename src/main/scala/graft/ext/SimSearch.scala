@@ -1274,23 +1274,6 @@ object SimSearch {
         col("negative"), col("sim"))
   }
 
-  /** DuckDB oracle for [[contrastiveTriplets]]. */
-  def contrastiveTripletsOracleSql(threshold: Double, p: LshParams): String =
-    s"""WITH ${bucketCtes(p)},
-       |cand AS (SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
-       |         FROM b a JOIN b c ON a.band = c.band AND a.bkey = c.bkey
-       |         WHERE a.vec_id < c.vec_id),
-       |pp AS (SELECT id_a, id_b, round(list_cosine_similarity(va.v, vb.v), 6) AS sim
-       |       FROM cand JOIN v va ON va.vec_id = id_a JOIN v vb ON vb.vec_id = id_b),
-       |pq AS (SELECT id_a, id_b, sim FROM pp WHERE sim >= $threshold),
-       |pr AS (SELECT id_a, id_b, sim,
-       |         row_number() OVER (ORDER BY id_a, id_b) - 1 AS prn FROM pq),
-       |c AS (SELECT count(*) AS np FROM pr)
-       |SELECT a.id_a AS anchor, a.id_b AS positive, n.id_a AS negative, a.sim
-       |FROM pr a CROSS JOIN c
-       |JOIN pr n ON n.prn = (a.prn + np // 2) % np
-       |WHERE n.id_a <> a.id_a AND n.id_a <> a.id_b""".stripMargin
-
   /** Symmetric int8 quantization: per-vector scale = max|v|/127, code_i
     * = floor(v_i/scale + 0.5) stored as TINYINT — 4× smaller than
     * float32 at rest, in shuffles, and in broadcast variables, which is

@@ -1,8 +1,6 @@
 package graft.stream
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -53,12 +51,10 @@ import graft.transform.CurationCompiler
   *    `hb = h mod` [[ShingleBuckets]] as a column, so the
   *    retroactive-revocation probe prunes to the eval delta's buckets
   *    on Parquet min/max statistics instead of scanning the accumulated
-  *    store. The layout is versioned in the store's `_BUCKETS` marker;
-  *    stores created with `hb=B` partition dirs keep them. Arriving
-  *    candidates are checked against the full eval state; arriving
-  *    eval rows retroactively REVOKE already-accepted digests (the
-  *    full-recompute semantics: an eval row contaminates documents
-  *    that arrived before it). Each (doc, eval) pair is checked
+  *    store. Arriving candidates are checked against the full eval
+  *    state; arriving eval rows retroactively REVOKE already-accepted
+  *    digests (the full-recompute semantics: an eval row contaminates
+  *    documents that arrived before it). Each (doc, eval) pair is checked
   *    exactly once — at whichever arrives later — with both shingle
   *    sets complete, so the monotone contamination verdict matches
   *    the batch chain. Identical text ⇒ identical digest ⇒ identical
@@ -79,184 +75,75 @@ import graft.transform.CurationCompiler
   */
 object StreamCuration {
 
-  /** Bucket count for NEWLY CREATED shingle stores (`hb = h mod
-    * buckets`): revocation probes prune to the eval delta's buckets. The
-    * bound is pinned by the probe arithmetic: a revocation delta of E
-    * eval shingles touches min(E, buckets) buckets, so the pruning
-    * factor saturates at `buckets` — at 64 a typical ≤10-shingle eval
-    * delta still skips ≥84% of the store. In the sorted layout `hb` is
-    * a data column, so the count no longer sets a tick's file count
-    * (one file per tick either way). A store's ACTUAL count is
-    * versioned in its `_BUCKETS` marker ([[shingleLayout]]), so this
-    * default can change — or a deployment can pick a larger count for
-    * a bigger eval suite — without breaking any existing store's
-    * pruning or readability.
+  /** Bucket count of the shingle store (`hb = h mod buckets`):
+    * revocation probes prune to the eval delta's buckets. The bound is
+    * pinned by the probe arithmetic: a revocation delta of E eval
+    * shingles touches min(E, buckets) buckets, so the pruning factor
+    * saturates at `buckets` — at 64 a typical ≤10-shingle eval delta
+    * still skips ≥84% of the store. `hb` is a data column, so the count
+    * does not set a tick's file count (one file per tick). The count is
+    * part of the store's format marker ([[StoreMarker]]): changing it
+    * makes every existing store fail loudly on its next tick instead of
+    * pruning `hb` written mod 64 against probes computed mod the new
+    * count, which would silently skip revocations.
     */
   val ShingleBuckets = 64
 
-  /** Name of the shingle store's layout marker file: `sorted:<buckets>`
-    * for the sorted layout, a bare `<buckets>` for `hb=` partition dirs.
-    * Underscore-prefixed, so parquet discovery ignores it.
+  /** Name of the shingle store's format marker file. Underscore-prefixed,
+    * so parquet discovery ignores it.
     */
-  private[graft] val BucketsMarkerName = "_BUCKETS"
+  private val BucketsMarkerName = "_BUCKETS"
 
-  private val SortedMarkerPrefix = "sorted:"
+  /** The one shingle-store format: every batch dir holds one file sorted
+    * on `(hb, h)` with `hb = h mod` [[ShingleBuckets]] as a data column.
+    */
+  private val StoreMarker = s"sorted:$ShingleBuckets"
 
-  /** The landed shingle store's columns in the sorted layout. */
-  private val SortedShingleSchema = StructType(Seq(
+  private val ShingleSchema = StructType(Seq(
     StructField("__h", StringType), StructField("h", LongType),
     StructField("hb", IntegerType)))
 
-  /** The landed shingle store's layout, probed from disk — the
-    * backward-compatibility seam: a store keeps the layout it was
-    * created with, and stores written before bucketing (or mixed, if a
-    * legacy checkpoint resumed under a bucketing engine) must keep
-    * REVOCATION CORRECT even though they cannot prune.
+  /** Whether `storeDir` holds a shingle store in [[StoreMarker]]'s format;
+    * false when it holds none yet. The marker is written before a store's
+    * first data file, so data without it — or a store with any other
+    * marker (`hb=` partition dirs stamped with a bare count, unbucketed
+    * stores) — was written by an older format. Reading such a store
+    * would prune it wrongly and silently skip revocations, so it throws.
     */
-  private[graft] sealed trait ShingleLayout
-  private[graft] object ShingleLayout {
-    /** Every batch dir holds files sorted on `(hb, h)` with `hb` (mod
-      * `buckets`) as a data column; probes prune on Parquet min/max
-      * statistics (row group and page).
-      */
-    final case class Sorted(buckets: Int) extends ShingleLayout
-    /** Every batch dir carries `hb=` partitions written at `buckets`. */
-    final case class Bucketed(buckets: Int) extends ShingleLayout
-    /** At least one batch dir predates bucketing: reads must go per-dir
-      * and unpruned (mixed dirs break whole-store partition discovery).
-      */
-    case object Legacy extends ShingleLayout
-    /** No batch has landed shingles yet. */
-    case object Empty extends ShingleLayout
-  }
-
-  /** Probe `storeDir`'s layout: the `_BUCKETS` marker wins (the
-    * versioned contract); absent a marker, a store whose every batch
-    * dir with data has the same layout has that layout, and anything
-    * else is legacy/mixed.
-    */
-  private[graft] def shingleLayout(spark: SparkSession,
-      storeDir: String): ShingleLayout = {
+  private def shingleStoreMarked(spark: SparkSession, storeDir: String): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(storeDir)
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) ShingleLayout.Empty
-    else graft.sink.AtomicPointer.read(conf, storeDir,
-        name = BucketsMarkerName) match {
-      case Some(m) if m.startsWith(SortedMarkerPrefix) =>
-        ShingleLayout.Sorted(m.stripPrefix(SortedMarkerPrefix).toInt)
-      case Some(n) => ShingleLayout.Bucketed(n.toInt)
-      case None =>
-        // Lazy, so a legacy store stops at its first dir's footer.
-        val layouts = fs.listStatus(p).iterator
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-          .flatMap(s => batchDirLayout(fs, s.getPath))
-        if (!layouts.hasNext) ShingleLayout.Empty
-        else {
-          val first = layouts.next()
-          if (first != ShingleLayout.Legacy && layouts.forall(_ == first)) first
-          else ShingleLayout.Legacy
-        }
+    if (!fs.exists(p)) false
+    else graft.sink.AtomicPointer.read(conf, storeDir, name = BucketsMarkerName) match {
+      case Some(StoreMarker) => true
+      case None if fs.listStatus(p).forall { s =>
+          val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".") } => false
+      case found => throw new IllegalStateException(
+        s"shingle store $storeDir has format marker ${found.getOrElse("<none>")}," +
+        s" expected $StoreMarker: it was written in an older format, and reading" +
+        " it would skip revocations")
     }
   }
 
-  /** One marker-less batch dir's layout, or None if it holds no data.
-    * The counts are pinned to LITERAL 64, not ShingleBuckets: the r14
-    * engine bucketed at 64 only, and a sorted dir without a marker is
-    * the crash window of a store's first sorted write, made at 64.
-    * Tracking the default here would, after a default change, prune
-    * `hb` (written mod 64) against probes computed mod the new default
-    * — silently missing revocations.
-    */
-  private def batchDirLayout(fs: FileSystem, dir: Path): Option[ShingleLayout] = {
-    val kids = fs.listStatus(dir)
-    if (kids.exists(k => k.isDirectory && k.getPath.getName.startsWith("hb=")))
-      Some(ShingleLayout.Bucketed(64))
-    else kids.find(k => k.isFile && !k.getPath.getName.startsWith("_") &&
-        !k.getPath.getName.startsWith(".")).map { f =>
-      // Footer only (no Spark job): an `hb` column marks a sorted write.
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, fs.getConf))
-      try {
-        if (r.getFileMetaData.getSchema.containsField("hb")) ShingleLayout.Sorted(64)
-        else ShingleLayout.Legacy
-      } finally r.close()
-    }
-  }
-
-  /** `(__h, h)` rows of the accumulated shingle store, restricted —
-    * when the layout allows pruning — to the buckets an eval-shingle
-    * delta can touch. Sorted stores filter `hb IN (probed)` as a data
-    * filter that Parquet min/max statistics turn into skipped row
-    * groups and pages; bucketed stores read only the delta's `hb=`
-    * partition dirs (revocation work follows the DELTA's size either
-    * way); legacy/mixed stores fall back to an unpruned PER-BATCH-DIR
-    * union (whole-store discovery over mixed dirs throws on conflicting
-    * structures), trading the pruning away but never correctness.
+  /** `(__h, h)` rows of the accumulated shingle store in the buckets an
+    * eval-shingle delta can touch: `hb IN (probed)` is a data filter
+    * that Parquet min/max statistics turn into skipped row groups and
+    * pages, so revocation work follows the DELTA's size, not the
+    * store's. Empty when no shingles have landed yet.
     */
   private[graft] def shingleStateFor(spark: SparkSession, storeDir: String,
-      evalDelta: DataFrame): DataFrame = {
-    // `store`'s rows in the buckets the eval delta can possibly touch
-    // (≤ nb ints — a KB-scale metadata collect).
-    def pruned(store: DataFrame, nb: Int): DataFrame = {
+      evalDelta: DataFrame): DataFrame =
+    if (!shingleStoreMarked(spark, storeDir))
+      emptyDf(spark, StructType(ShingleSchema.take(2)))
+    else {
+      // ≤ ShingleBuckets ints — a KB-scale metadata collect.
       val probed = evalDelta
-        .select(pmod(col("h"), lit(nb)).cast("int").as("hb"))
+        .select(pmod(col("h"), lit(ShingleBuckets)).cast("int").as("hb"))
         .distinct().collect().map(_.getInt(0)).toSeq
-      store.filter(col("hb").isin(probed: _*)).select(col("__h"), col("h"))
+      spark.read.schema(ShingleSchema).parquet(storeDir)
+        .filter(col("hb").isin(probed: _*)).select(col("__h"), col("h"))
     }
-    shingleLayout(spark, storeDir) match {
-      case ShingleLayout.Sorted(nb) =>
-        pruned(spark.read.schema(SortedShingleSchema).parquet(storeDir), nb)
-      case ShingleLayout.Bucketed(nb) =>
-        pruned(spark.read.parquet(storeDir), nb)
-      case ShingleLayout.Legacy =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        val p = new Path(storeDir)
-        val fs = p.getFileSystem(conf)
-        fs.listStatus(p).map(_.getPath)
-          .filter(d => d.getName.startsWith("batch_id="))
-          .map(d => spark.read.parquet(d.toString).select(col("__h"), col("h")))
-          .reduceLeft(_ unionByName _)
-      case ShingleLayout.Empty =>
-        emptyDf(spark, StructType(Seq(StructField("__h", StringType),
-          StructField("h", LongType))))
-    }
-  }
-
-  /** Land one batch's `(__h, h)` shingle rows in `storeDir` under the
-    * store's `layout` — an empty store starts sorted at [[ShingleBuckets]]
-    * — then stamp the layout's marker. The marker goes AFTER the write:
-    * it is the store's contract for every later read/write.
-    */
-  private[graft] def writeShingleBatch(sh: DataFrame, storeDir: String,
-      batchId: Long, layout: ShingleLayout): Unit = {
-    val dir = s"$storeDir/batch_id=$batchId"
-    def withHb(nb: Int) = sh.withColumn("hb", pmod(col("h"), lit(nb)).cast("int"))
-    def stamp(marker: String): Unit = graft.sink.AtomicPointer.write(
-      sh.sparkSession.sparkContext.hadoopConfiguration, storeDir, marker,
-      name = BucketsMarkerName)
-    layout match {
-      case ShingleLayout.Legacy =>
-        sh.write.mode("overwrite").parquet(dir)
-      case ShingleLayout.Bucketed(nb) =>
-        withHb(nb).write.mode("overwrite").partitionBy("hb").parquet(dir)
-        stamp(nb.toString)
-      case _ =>
-        val nb = layout match {
-          case ShingleLayout.Sorted(b) => b
-          case _ => ShingleBuckets
-        }
-        // coalesce, not repartition: one batch-bounded writer task and
-        // no extra shuffle stage. 1000-row pages (20000 by default) give
-        // the page index about bucket granularity on a 500k-row batch:
-        // the pruned scan of a 10M-row store fell from ~0.4 s to
-        // ~0.25 s on 4 cores, for ~4% more bytes.
-        withHb(nb).coalesce(1).sortWithinPartitions(col("hb"), col("h"))
-          .write.mode("overwrite")
-          .option("parquet.page.row.count.limit", "1000")
-          .parquet(dir)
-        stamp(s"$SortedMarkerPrefix$nb")
-    }
-  }
 
   // ---------------------------------------------------------------
   // Atomic versioned output publish (shared by both modes)
@@ -484,11 +371,7 @@ object StreamCuration {
           dirExists(spark, s"$stateDir/evalsh/batch_id=$batchId") =>
         val newEvalShPart = spark.read.schema(evalShSchema)
           .parquet(s"$stateDir/evalsh/batch_id=$batchId")
-        // The store scan prunes to the eval delta's buckets when the
-        // landed layout supports it (revocation work follows the
-        // DELTA's size, not the accumulated store's); a legacy
-        // pre-bucketing store falls back to an unpruned per-dir scan —
-        // see [[shingleStateFor]].
+        // Pruned to the eval delta's buckets — see [[shingleStateFor]].
         val shState = shingleStateFor(spark, s"$stateDir/shingles",
             newEvalShPart)
           .join(o.select(col("__h")), Seq("__h"), "left_semi")
@@ -541,21 +424,30 @@ object StreamCuration {
       // The shingle store is corpus-shingle-sized at scale, and
       // revocation (step 4) probes it with a usually-tiny eval delta,
       // keyed by shingle-hash bucket (hb = h mod buckets) so that scan
-      // PRUNES to the delta's buckets instead of reading the store. A
-      // new store lands each batch as ONE file sorted on (hb, h): the
-      // probe prunes on its min/max statistics, and a tick writes one
-      // file instead of a file per bucket. A store keeps the layout and
-      // bucket count it was created with (its `_BUCKETS` marker — never
-      // re-bucket under a changed default): `hb=` partition dirs stay
-      // partitioned, and a legacy store keeps its unbucketed layout so
-      // its per-dir fallback reads stay structurally uniform.
+      // PRUNES to the delta's buckets instead of reading the store. Each
+      // batch lands as ONE file sorted on (hb, h): the probe prunes on
+      // its min/max statistics. The format marker goes BEFORE the
+      // store's first data file, so no store of this format is ever
+      // without it; a store in any other format throws here.
       val storeDir = s"$stateDir/shingles"
-      val sh = NearDup.shingleSets(
+      if (!shingleStoreMarked(spark, storeDir))
+        graft.sink.AtomicPointer.write(spark.sparkContext.hadoopConfiguration,
+          storeDir, StoreMarker, name = BucketsMarkerName)
+      // coalesce, not repartition: one batch-bounded writer task and no
+      // extra shuffle stage. 1000-row pages (20000 by default) give the
+      // page index about bucket granularity on a 500k-row batch: the
+      // pruned scan of a 10M-row store fell from ~0.4 s to ~0.25 s on 4
+      // cores, for ~4% more bytes.
+      NearDup.shingleSets(
           newWinners.filter(col("o_id").isNull)
             .select(col("__h"), col("text").as(textF)),
           "__h", textF, cu.decontam.get.shingleLen)
         .select(col("doc_id").as("__h"), explode(col("hs")).as("h"))
-      writeShingleBatch(sh, storeDir, batchId, shingleLayout(spark, storeDir))
+        .withColumn("hb", pmod(col("h"), lit(ShingleBuckets)).cast("int"))
+        .coalesce(1).sortWithinPartitions(col("hb"), col("h"))
+        .write.mode("overwrite")
+        .option("parquet.page.row.count.limit", "1000")
+        .parquet(s"$storeDir/batch_id=$batchId")
     }
 
     // -- 7. bounded-work stats (the per-batch evidence): every count

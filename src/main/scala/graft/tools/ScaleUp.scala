@@ -23,9 +23,6 @@ object ScaleUp {
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1: $factor")
     val spark = graft.GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
-    // 32 shuffle partitions whatever the core count, as every committed
-    // sf1 fixture was built with, so a rebuilt fixture stays comparable.
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("ERROR")
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))

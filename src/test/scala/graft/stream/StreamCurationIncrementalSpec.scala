@@ -127,8 +127,8 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val storeDir = s"$st/shingles"
-    assert(StreamCuration.shingleLayout(s, storeDir) ===
-      StreamCuration.ShingleLayout.Sorted(StreamCuration.ShingleBuckets))
+    assert(graft.sink.AtomicPointer.read(s.sparkContext.hadoopConfiguration,
+      storeDir, name = "_BUCKETS") === Some(s"sorted:${StreamCuration.ShingleBuckets}"))
     // Layout: every batch dir is one data file, no hb= bucket dirs.
     val batches = new java.io.File(storeDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
@@ -166,75 +166,6 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
     assert(probe.as[(String, Long)].collect().sorted.toSeq === bucketRows)
   }
 
-  test("shingle-store layout versioning: marker wins, pre-marker bucketed" +
-    " stores detect at the default, legacy/mixed stores fall back unpruned" +
-    " with identical rows") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    val s = spark
-    import s.implicits._
-    val rows = (0L until 40L).map(i => (s"d$i", i * 7L))
-    val df = rows.toDF("__h", "h")
-    def bucketed(dir: String, batch: Long, nb: Int): Unit =
-      df.withColumn("hb", pmod(col("h"), lit(nb)).cast("int"))
-        .write.mode("overwrite").partitionBy("hb")
-        .parquet(s"$dir/batch_id=$batch")
-    def flat(dir: String, batch: Long): Unit =
-      df.write.mode("overwrite").parquet(s"$dir/batch_id=$batch")
-    val evalDelta = Seq(7L, 14L).toDF("h")
-    def gotRows(dir: String): Set[(String, Long)] =
-      StreamCuration.shingleStateFor(s, dir, evalDelta)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    // Rows the delta's buckets hold under the default layout — what a
-    // pruned scan must return; legacy scans return the full store.
-    val deltaBuckets = Set(7L % 64, 14L % 64)
-    val prunedTruth = rows.filter(r => deltaBuckets(r._2 % 64)).toSet
-
-    // 1. Marker wins: a store stamped at 32 buckets prunes at 32, even
-    //    though the engine default is 64.
-    val m32 = tmp("sci_m32")
-    bucketed(m32, 0L, 32)
-    graft.sink.AtomicPointer.write(s.sparkContext.hadoopConfiguration,
-      m32, "32", name = "_BUCKETS")
-    assert(StreamCuration.shingleLayout(s, m32) ===
-      StreamCuration.ShingleLayout.Bucketed(32))
-    assert(gotRows(m32) === rows.filter(r =>
-      Set(7L % 32, 14L % 32)(r._2 % 32)).toSet)
-
-    // 2. Pre-marker bucketed store (the r14 layout): detected at the
-    //    default count; the scan is partition-pruned.
-    val pre = tmp("sci_pre")
-    bucketed(pre, 0L, 64); bucketed(pre, 1L, 64)
-    assert(StreamCuration.shingleLayout(s, pre) ===
-      StreamCuration.ShingleLayout.Bucketed(64))
-    assert(gotRows(pre) === (prunedTruth ++ prunedTruth))
-    val plan = StreamCuration.shingleStateFor(s, pre, evalDelta)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("hb"),
-      s"bucketed fallback must partition-prune:\n$plan")
-
-    // 3. Legacy store (written before bucketing existed): no hb column
-    //    anywhere — reads fall back to the full store, revocation rows
-    //    intact. This is the resume path that previously failed on the
-    //    missing hb partition column.
-    val leg = tmp("sci_leg")
-    flat(leg, 0L); flat(leg, 1L)
-    assert(StreamCuration.shingleLayout(s, leg) ===
-      StreamCuration.ShingleLayout.Legacy)
-    assert(gotRows(leg) === rows.toSet)
-
-    // 4. MIXED store (legacy checkpoint resumed under r14's always-
-    //    bucketed writer): whole-store discovery would throw on
-    //    conflicting structures; the per-dir fallback returns every row.
-    val mix = tmp("sci_mix")
-    flat(mix, 0L); bucketed(mix, 1L, 64)
-    assert(StreamCuration.shingleLayout(s, mix) ===
-      StreamCuration.ShingleLayout.Legacy)
-    assert(gotRows(mix) === rows.toSet)
-
-    // 5. Empty/absent store: clean empty frame, no probe errors.
-    assert(gotRows(tmp("sci_absent")) === Set.empty[(String, Long)])
-  }
-
   private def writeTicks(ticks: Seq[Seq[ScDoc]], st: String, out: String,
       from: Long = 0L): Unit = {
     val s = spark; import s.implicits._
@@ -246,68 +177,58 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
   private def output(out: String): Set[Seq[Any]] =
     StreamCuration.readOutput(spark, out).collect().map(_.toSeq).toSet
 
-  test("layout lane: an hb=-dir store stamped 64 keeps hb= dirs under the" +
-    " new writer, and its output equals the batch chain") {
+  test("a store in an older shingle format fails the revoking tick loudly" +
+    " and publishes nothing; an absent store probes empty") {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     val s = spark
-    val (st, out) = (tmp("sci_hbst"), tmp("sci_hbout"))
-    val storeDir = s"$st/shingles"
-    val ticks = corpus.grouped(3).toSeq // doc 7 in tick 1, its eval in tick 2
-    writeTicks(ticks.take(1), st, out)
-    // Re-land tick 0's shingles the way the hb=-dir engine left them:
-    // `hb=` partition dirs and the bare bucket-count marker.
-    val b0 = s"$storeDir/batch_id=0"
-    val rows = s.read.parquet(b0).collect()
-    val schema = s.read.parquet(b0).schema
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(b0))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      .write.partitionBy("hb").parquet(b0)
-    graft.sink.AtomicPointer.write(s.sparkContext.hadoopConfiguration,
-      storeDir, "64", name = "_BUCKETS")
-    assert(StreamCuration.shingleLayout(s, storeDir) ===
-      StreamCuration.ShingleLayout.Bucketed(64))
-    writeTicks(ticks.drop(1), st, out, from = 1L)
-    assert(StreamCuration.shingleLayout(s, storeDir) ===
-      StreamCuration.ShingleLayout.Bucketed(64))
-    assert(graft.sink.AtomicPointer.read(s.sparkContext.hadoopConfiguration,
-      storeDir, name = "_BUCKETS") === Some("64"))
-    val batches = new java.io.File(storeDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-    assert(batches.length === ticks.size)
-    batches.foreach { b =>
-      assert(!b.listFiles().exists(_.getName.endsWith(".parquet")),
-        s"${b.getName}: an hb=-dir store must not gain batch-level data files")
+    val conf = s.sparkContext.hadoopConfiguration
+    // Tick 0 accepts doc 7; tick 1 brings its eval row (doc 100), so
+    // tick 1 must probe the shingle store to revoke doc 7.
+    val (tick0, tick1) = corpus.partition(_.doc_id != 100L)
+    val (base, out) = (tmp("sci_fmt"), tmp("sci_fmtout"))
+    writeTicks(Seq(tick0), base, out)
+    val b0 = s"$base/shingles/batch_id=0"
+    val shRows = s.read.parquet(b0).select("__h", "h")
+    def relanded(tag: String)(reland: String => Unit): String = {
+      val st = tmp(tag)
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(base),
+        new java.io.File(st))
+      reland(s"$st/shingles")
+      st
     }
-    assert(batches.exists(_.listFiles().exists(_.getName.startsWith("hb="))))
-    assert(output(out) === batchTruth())
-    assert(!output(out).exists(_.head == 7L), "doc 7 must be revoked")
-  }
-
-  test("layout lane: a sorted store left without its marker (crash before" +
-    " the marker write) reads correctly and is re-stamped by the replay") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    val s = spark
-    import s.implicits._
-    val (st, out) = (tmp("sci_nmst"), tmp("sci_nmout"))
-    val storeDir = s"$st/shingles"
-    val ticks = corpus.grouped(3).toSeq
-    writeTicks(ticks.take(1), st, out)
-    new java.io.File(s"$storeDir/_BUCKETS").delete()
-    assert(StreamCuration.shingleLayout(s, storeDir) ===
-      StreamCuration.ShingleLayout.Sorted(64))
-    val store = s.read.parquet(storeDir).select("__h", "h").as[(String, Long)]
-      .collect().toSeq
-    val delta = store.take(2).map(_._2).toDF("h")
-    val deltaBuckets = delta.select(pmod(col("h"), lit(64))).as[Long].collect().toSet
-    val got = StreamCuration.shingleStateFor(s, storeDir, delta)
-      .as[(String, Long)].collect().sorted.toSeq
-    assert(got.nonEmpty)
-    assert(got === store.filter(r => deltaBuckets(java.lang.Math.floorMod(r._2, 64L)))
-      .sorted)
-    // The at-least-once replay of the crashed tick, then the rest.
-    writeTicks(ticks, st, out)
-    assert(graft.sink.AtomicPointer.read(s.sparkContext.hadoopConfiguration,
-      storeDir, name = "_BUCKETS") === Some("sorted:64"))
-    assert(output(out) === batchTruth())
+    val stores = Seq(
+      // hb= partition dirs stamped with the bare bucket count.
+      "hb=-dir" -> relanded("sci_fmthb") { store =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$store/batch_id=0"))
+        shRows.withColumn("hb", pmod(col("h"), lit(64)).cast("int"))
+          .write.partitionBy("hb").parquet(s"$store/batch_id=0")
+        graft.sink.AtomicPointer.write(conf, store, "64", name = "_BUCKETS")
+      },
+      // Unbucketed: no hb column and no marker.
+      "flat" -> relanded("sci_fmtflat") { store =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$store/batch_id=0"))
+        new java.io.File(s"$store/_BUCKETS").delete()
+        shRows.write.parquet(s"$store/batch_id=0")
+      },
+      // This format with its marker deleted.
+      "unmarked" -> relanded("sci_fmtnm") { store =>
+        new java.io.File(s"$store/_BUCKETS").delete()
+      })
+    val published = graft.sink.AtomicPointer.read(conf, out)
+    assert(published === Some("v=0"))
+    stores.foreach { case (kind, st) =>
+      val outCopy = tmp("sci_fmtout")
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(out),
+        new java.io.File(outCopy))
+      val e = intercept[IllegalStateException] {
+        writeTicks(Seq(tick1), st, outCopy, from = 1L)
+      }
+      assert(e.getMessage.contains(s"$st/shingles"), s"$kind: ${e.getMessage}")
+      assert(graft.sink.AtomicPointer.read(conf, outCopy) === published, kind)
+    }
+    // No shingles landed yet: the probe is a clean empty frame.
+    assert(StreamCuration.shingleStateFor(s, tmp("sci_absent"), shRows.select("h"))
+      .isEmpty)
   }
 
   test("multi-tick stats: after every tick (displacement, late revoking eval," +
