@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.DotProduct.{col => ndot}
+
 /** ANN serving-quality EVALUATION — the measurement half of the
   * similarity-search surface. Every approximate index in this engine
   * (IVF, trained IVF, PQ, SRP, LSH) trades recall for probe cost;
@@ -31,7 +33,7 @@ import org.apache.spark.sql.functions._
   * (spec-pinned).
   *
   * Scale shape: ground truth is a bounded-query brute scan (queries
-  * broadcast, corpus never shuffles — the [[SimSearch.bruteTopKN]]
+  * broadcast, corpus never shuffles — the [[SimSearch.bruteTopKNFiltered]]
   * plan); the ANN side is whatever index is being graded; the
   * comparison itself joins two top-k lists of ≤ queryBound·k rows —
   * driver-negligible at any corpus size.
@@ -70,7 +72,6 @@ object AnnEval {
       s"probe levels must be ascending positives: $levels")
     val spark = emb.sparkSession
     import spark.implicits._
-    val ndot = graft.functions.DotProduct.fn(spark)
     val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
       sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
     val csim = round(ndot(col("v"), col("cv")) / (col("n") * col("cn")), 6)
@@ -104,7 +105,7 @@ object AnnEval {
       .withColumn("arank", row_number().over(wr))
       .filter(col("arank") <= k)
       .select(col("probes"), col("qid"), col("cid"), col("arank"))
-    val gt = SimSearch.bruteTopKN(emb, queryBound, k)
+    val gt = SimSearch.bruteTopKNFiltered(emb, queryBound, k)
       .select(col("qid"), col("cid"), col("rank").as("grank"))
     gt.crossJoin(broadcast(lv))
       .join(ann, Seq("probes", "qid", "cid"), "left")
@@ -170,7 +171,7 @@ object AnnEval {
        |       FROM sims JOIN lv ON mincrn <= probes),
        |ann AS (SELECT probes, qid, cid, arank FROM ar WHERE arank <= $k),
        |gt AS (
-       |${SimSearch.bruteTopKNOracleSql(queryBound, k)}
+       |${SimSearch.bruteTopKNFilteredOracleSql(queryBound, k)}
        |), j AS (
        |  SELECT lv.probes, g.qid, g.rank AS grank, a.arank
        |  FROM gt g CROSS JOIN lv

@@ -69,7 +69,6 @@ object Bm25 {
     // float path stays engine-native and bit-comparable with the
     // oracle's ln; per-term scores are summed as DECIMAL(18,6), which
     // is associative-exact regardless of expression order.
-    val termCount = graft.functions.TermCount.fn(docs.sparkSession)
     def score(t: String): org.apache.spark.sql.Column = {
       val d = dfMap(t)
       val idf = log(lit(1.0) +
@@ -77,7 +76,7 @@ object Bm25 {
       // Codegen'd occurrence count — the interpreted equivalent
       // (size(filter(tk, _ === t))) allocates a filtered array per
       // (row, term) and was the scoring job's hot path.
-      val tf = termCount(col("tk"), lit(t)).cast("long")
+      val tf = graft.functions.TermCount.col(col("tk"), lit(t)).cast("long")
       val tfPart = (tf * expr(K1Plus1)) /
         (tf + expr(K1) * (expr(OneMinusB) + expr(B) * col("dl") / lit(avgdl)))
       when(tf > 0, round(idf * tfPart, 6).cast("decimal(18,6)"))

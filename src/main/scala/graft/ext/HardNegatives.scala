@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.DotProduct.{col => ndot}
+
 /** Hard-negative mining for contrastive / retriever training (the DPR
   * recipe, Karpukhin et al. 2020): for each anchor, the top-k most
   * similar vectors with a DIFFERENT label — maximally confusable
@@ -21,20 +23,19 @@ import org.apache.spark.sql.functions._
 object HardNegatives {
 
   def mine(emb: DataFrame, queryBound: Int, k: Int): DataFrame = {
-    val nd = graft.functions.DotProduct.fn(emb.sparkSession)
     val q = emb.filter(col("vec_id") < queryBound)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("embedding").as("qv"),
-        sqrt(nd(col("embedding"), col("embedding"))).as("qn"))
+        sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))
     val c = emb.select(col("vec_id").as("cid"), col("label").as("clabel"),
       col("embedding").as("cv"),
-      sqrt(nd(col("embedding"), col("embedding"))).as("cn"))
+      sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("cid").asc)
     broadcast(q)
       .join(c, col("qid") =!= col("cid") && col("qlabel") =!= col("clabel"))
       .select(col("qid"), col("cid"), col("clabel"),
-        round(nd(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
+        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.DotProduct.{col => ndot}
+
 /** Landed-IVF index MAINTENANCE: build the cell table for a base
   * corpus, then UPSERT later-arriving vectors by assigning them to the
   * FROZEN centroids and appending their (vec_id, cell) rows — no
@@ -50,7 +52,6 @@ object IvfIndex {
     */
   def topKOverCells(emb: DataFrame, cells: DataFrame, cents: DataFrame,
       queryBound: Int, k: Int, probes: Int): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
     val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
       sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
     val queries = vecs.filter(col("vec_id") < queryBound)
@@ -174,22 +175,14 @@ object IvfIndex {
     */
   def publishIndex(cents: DataFrame, cells: DataFrame, indexDir: String,
       version: Long, trainedWatermark: Option[Long] = None): Unit = {
-    val spark = cents.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    cents.write.mode("overwrite").parquet(s"$indexDir/v=$version/centroids")
-    cells.write.mode("overwrite").parquet(s"$indexDir/v=$version/cells")
-    trainedWatermark.foreach { w =>
-      graft.sink.AtomicPointer.write(
-        conf, s"$indexDir/v=$version", w.toString, name = WatermarkName)
+    val conf = cents.sparkSession.sparkContext.hadoopConfiguration
+    graft.sink.AtomicPointer.publishVersion(conf, indexDir, version) { vDir =>
+      cents.write.mode("overwrite").parquet(s"$vDir/centroids")
+      cells.write.mode("overwrite").parquet(s"$vDir/cells")
+      trainedWatermark.foreach { w =>
+        graft.sink.AtomicPointer.write(conf, vDir, w.toString, name = WatermarkName)
+      }
     }
-    graft.sink.AtomicPointer.write(conf, indexDir, s"v=$version")
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).map(_.getPath).flatMap { p =>
-      val n = p.getName
-      if (n.startsWith("v=")) scala.util.Try(n.drop(2).toLong).toOption.map(_ -> p)
-      else None
-    }.sortBy(-_._1).drop(2).foreach { case (_, p) => fs.delete(p, true) }
   }
 
   /** The published version `_CURRENT` points at, if any. */

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.DotProduct.{col => ndot}
+
 /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998)
   * — the standard diversity pass over a retrieval candidate list: pick
   * greedily, each step taking the candidate maximizing
@@ -147,15 +149,14 @@ object MmrRerank {
     require(k >= 1 && m >= k, s"need m >= k >= 1, got m=$m k=$k")
     val session = emb.sparkSession
     import session.implicits._
-    val nd = graft.functions.DotProduct.fn(session)
     val e = emb.select(col("vec_id"), col("embedding"),
-      sqrt(nd(col("embedding"), col("embedding"))).as("__n"))
+      sqrt(ndot(col("embedding"), col("embedding"))).as("__n"))
     val q = e.filter(col("vec_id") < queryBound)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("__n").as("qn"))
     val c = candWhere.fold(emb)(emb.filter)
       .select(col("vec_id"), col("embedding"),
-        sqrt(nd(col("embedding"), col("embedding"))).as("__n"))
+        sqrt(ndot(col("embedding"), col("embedding"))).as("__n"))
       .select(col("vec_id").as("cid"), col("embedding").as("cv"),
         col("__n").as("cn"))
 
@@ -163,7 +164,7 @@ object MmrRerank {
       .orderBy(col("rel").desc, col("cid").asc)
     val cand = broadcast(q).join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), col("cv"), col("cn"),
-        round(nd(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("rel"))
+        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("rel"))
       .withColumn("__rn", row_number().over(wRel))
       .filter(col("__rn") <= m)
       .select(col("qid"), col("cid"), col("rel"), col("cn"),

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.DotProduct.{col => ndot}
+
 /** Signed random projection (SRP) dimensionality reduction: project
   * each embedding onto `outDim` deterministic ±1 hyperplanes —
   * Achlioptas-style database-friendly random projection, the standard
@@ -118,7 +120,6 @@ object RandomProjection {
     topKOverVecs(arrays, queryBound)
 
   private def topKOverVecs(vecs: DataFrame, queryBound: Int): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(vecs.sparkSession)
     val z = vecs
       .select(col("vec_id"), col("__r"),
         ndot(col("__r"), col("__r")).as("nrm"))

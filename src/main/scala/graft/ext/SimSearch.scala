@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.DotProduct.{col => ndot}
+
 /** Similarity search over embedding columns (north star; SURVEY §2.7).
   *
   * Two paths sharing one exact re-rank:
@@ -160,6 +162,45 @@ object SimSearch {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  /** `(vec_id, embedding, ‖embedding‖)` as `(id, v, n)`: every cosine
+    * below divides by norms computed once per vector, before any pair
+    * join (identical floats, a third of the per-pair fold work).
+    */
+  private def normed(emb: DataFrame, id: String, v: String, n: String): DataFrame =
+    emb.select(if (id == "vec_id") col(id) else col("vec_id").as(id),
+      col("embedding").as(v), sqrt(ndot(col("embedding"), col("embedding"))).as(n))
+
+  /** Cosine of vector columns `a`, `b` from their norms `na`, `nb`,
+    * rounded to 6 dp so rankings are robust to cross-engine summation.
+    */
+  private def cos6(a: String, b: String, na: String, nb: String): Column =
+    round(ndot(col(a), col(b)) / (col(na) * col(nb)), 6)
+
+  /** The per-query total order of every ranked result: sim DESC, cid ASC. */
+  private val ByQuery = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
+
+  /** Top-`k` (qid, cid, sim) rows per query, ranked 1..k in `rank`. */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(ByQuery)).filter(col("rank") <= k)
+
+  /** The best (qid, cid, sim) row per query. */
+  private def top1PerQuery(scored: DataFrame): DataFrame =
+    scored.withColumn("rn", row_number().over(ByQuery)).filter(col("rn") === 1)
+      .select(col("qid"), col("cid"), col("sim"))
+
+  /** Candidate (qid, cid) pairs with both sides' vectors and norms:
+    * the bounded query side broadcasts, the corpus side streams.
+    */
+  private def withVectors(cand: DataFrame, emb: DataFrame, queryBound: Int): DataFrame =
+    cand.join(broadcast(normed(emb.filter(col("vec_id") < queryBound), "qid", "qv", "qn")), "qid")
+      .join(normed(emb, "cid", "cv", "cn"), "cid")
+
+  /** Shared exact re-rank over (qid, cid, qv, cv, qn, cn) pairs:
+    * deterministic cosine (round 6, cid tiebreak), top-1 per query.
+    */
+  private def rerank(pairs: DataFrame): DataFrame =
+    top1PerQuery(pairs.select(col("qid"), col("cid"), cos6("qv", "cv", "qn", "cn").as("sim")))
+
   /** Deterministic sparse ±1 hyperplanes: `numPlanes` planes, each with
     * `nnz` (dimension, sign) pairs from a fixed-seed PRNG. The literal
     * plane set is embedded identically in the Spark plan and in the
@@ -203,25 +244,15 @@ object SimSearch {
         org.apache.spark.sql.graft.ColumnBridge.expression(v),
         ps.map(_.map(_._1)), ps.map(_.map(_._2.toDouble)), bands, rowsPerBand))
 
-  /** Exact brute-force cosine top-1 for vec_id < queryBound. Norms are
-    * computed once per vector before the pair join (identical floats,
-    * a third of the per-pair fold work).
-    */
-  def bruteTopK(emb: DataFrame, queryBound: Int): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val q = emb.filter(col("vec_id") < queryBound)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))
-    val c = emb.select(col("vec_id").as("cid"), col("embedding").as("cv"),
-      sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
-    rerank(broadcast(q).join(c, col("qid") =!= col("cid")), ndot)
-  }
+  /** Exact brute-force cosine top-1 for vec_id < queryBound. */
+  def bruteTopK(emb: DataFrame, queryBound: Int): DataFrame =
+    rerank(broadcast(normed(emb.filter(col("vec_id") < queryBound), "qid", "qv", "qn"))
+      .join(normed(emb, "cid", "cv", "cn"), col("qid") =!= col("cid")))
 
   /** LSH-bucketed top-1: candidates from shared band buckets, exact
     * cosine re-rank. Geometry is demanded — see [[LshParams]].
     */
   def lshTopK(emb: DataFrame, queryBound: Int, p: LshParams): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
     val ps = planes(p.seed, p.numBands * p.rowsPerBand, p.dim, p.nnz)
     val banded = emb.select(col("vec_id"),
       posexplode(bandKeysNative(col("embedding"), ps, p.numBands, p.rowsPerBand))
@@ -238,66 +269,33 @@ object SimSearch {
         Seq("band", "bkey"))
       .filter(col("qid") =!= col("cid"))
       .select("qid", "cid")
-    val pairs = cand
-      .join(broadcast(emb.filter(col("vec_id") < queryBound)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-          sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))), "qid")
-      .join(emb.select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("cn")), "cid")
-    rerank(pairs, ndot)
+    rerank(withVectors(cand, emb, queryBound))
   }
 
-  /** Exact brute-force top-k (ranked) for vec_id < queryBound. */
-  def bruteTopKN(emb: DataFrame, queryBound: Int, k: Int): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val q = emb.filter(col("vec_id") < queryBound)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))
-    val c = emb.select(col("vec_id").as("cid"), col("embedding").as("cv"),
-      sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    broadcast(q).join(c, col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
-  /** Filtered vector search: exact ranked top-k among the candidates
-    * satisfying a metadata predicate — the PRE-FILTER serving shape.
-    * The alternative (post-filtering an ANN result list) silently
+  /** Exact brute-force top-k (ranked) for vec_id < queryBound among the
+    * candidates satisfying `candWhere` (default `lit(true)`, which the
+    * optimizer prunes: the whole corpus). With a predicate this is the
+    * PRE-FILTER serving shape of filtered vector search. The alternative (post-filtering an ANN result list) silently
     * returns fewer than k rows whenever the filter is selective,
     * because the index retrieved its neighbors before knowing about
     * the predicate; pre-filtering guarantees exactly k eligible
     * neighbors per query (or all of them, if fewer exist). At scale
     * the predicate pushes into the candidate scan (`PushedFilters`),
-    * so the selective case reads LESS data than the unfiltered one —
-    * the plan mirrors [[bruteTopKN]]: queries broadcast, candidates
-    * never shuffle, per-query heaps serve the rank filter
-    * (WindowGroupLimit).
+    * so the selective case reads LESS data than the unfiltered one.
+    * Queries broadcast, candidates never shuffle, per-query heaps
+    * serve the rank filter (WindowGroupLimit).
     */
   def bruteTopKNFiltered(emb: DataFrame, queryBound: Int, k: Int,
-      candWhere: Column): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val q = emb.filter(col("vec_id") < queryBound)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))
-    val c = emb.filter(candWhere)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("cn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    broadcast(q).join(c, col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      candWhere: Column = lit(true)): DataFrame =
+    topKPerQuery(broadcast(normed(emb.filter(col("vec_id") < queryBound), "qid", "qv", "qn"))
+      .join(normed(emb.filter(candWhere), "cid", "cv", "cn"), col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), cos6("qv", "cv", "qn", "cn").as("sim")), k)
 
   /** DuckDB twin of [[bruteTopKNFiltered]]; `candWhere` is a SQL
-    * predicate over the embeddings columns.
+    * predicate over the embeddings columns (candidate alias `c`).
     */
   def bruteTopKNFilteredOracleSql(queryBound: Int, k: Int,
-      candWhere: String): String =
+      candWhere: String = "TRUE"): String =
     s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
        |           FROM embeddings),
        |p AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
@@ -309,54 +307,46 @@ object SimSearch {
        |      FROM p)
        |SELECT qid, cid, sim, CAST(rn AS INT) AS rank FROM r WHERE rn <= $k""".stripMargin
 
-  def bruteTopKNOracleSql(queryBound: Int, k: Int): String =
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |p AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-       |        round(list_cosine_similarity(q.v, c.v), 6) AS sim
-       |      FROM v q JOIN v c ON q.vec_id <> c.vec_id
-       |      WHERE q.vec_id < $queryBound),
-       |r AS (SELECT qid, cid, sim,
-       |        row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid ASC) AS rn
-       |      FROM p)
-       |SELECT qid, cid, sim, CAST(rn AS INT) AS rank FROM r WHERE rn <= $k""".stripMargin
-
   /** IVF-style ANN: K centroid vectors partition the corpus into cells
     * (argmax rounded cosine, centroid-id tiebreak); each query probes
     * its P nearest cells and re-ranks those candidates exactly.
     *
     * Centroids here are the first K corpus vectors so the index is
-    * fully deterministic and oracle-reproducible; production trains
-    * them offline (k-means) — the assignment/probe/re-rank plumbing,
+    * fully deterministic and oracle-reproducible; a trained index
+    * serves [[trainCentroidsLocked]] centroids through
+    * [[ivfTopKWithCentroids]] — the assignment/probe/re-rank plumbing,
     * which is what runs at scale, is identical. Assignment cost is
     * N×K dots (map-only, broadcast centroids); the probe join is keyed
     * on cell id, so corpus embeddings shuffle at most once.
     */
   def ivfTopK(emb: DataFrame, queryBound: Int, p: IvfParams): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-      sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
+    val vecs = normed(emb, "vec_id", "v", "n")
     val cents = vecs.filter(col("vec_id") < p.numCentroids)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("n").as("cn"))
     ivfWithCentroids(vecs, queryBound, p.probes, cents)
   }
 
+  /** Every vector's centroids ranked by rounded cosine (`crn`, 1 =
+    * its cell; centroid-id tiebreak) over (`vec_id`, `v`, `n`) vectors
+    * and a broadcast (`cent_id`, `cv`, `cn`) centroid set: the corpus
+    * never shuffles for assignment (window over K ranked rows per
+    * vector after a broadcast cross join).
+    */
+  private def centroidRanks(vecs: DataFrame, cents: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cent_id").asc)
+    vecs.crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("cent_id"), cos6("v", "cv", "n", "cn").as("csim"))
+      .withColumn("crn", row_number().over(w))
+  }
+
   /** IVF assignment/probe/re-rank against an EXPLICIT centroid set
     * (`cent_id`, `cv`, `cn`) — the shared core behind [[ivfTopK]]
-    * (first-K centroids, oracle-replicable) and [[ivfTopKTrained]]
-    * (k-means centroids, better cells). Centroids broadcast; the
-    * corpus never shuffles for assignment (window over K ranked rows
-    * per vector after a broadcast cross join).
+    * (first-K centroids, oracle-replicable) and [[ivfTopKWithCentroids]]
+    * (locked-trained or landed centroids, better cells).
     */
   private def ivfWithCentroids(vecs: DataFrame, queryBound: Int, probes: Int,
       cents: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(vecs.sparkSession)
-    // Rounding the assignment sim makes the ranking robust to
-    // cross-engine float-summation differences in the oracle.
-    val csim = round(ndot(col("v"), col("cv")) / (col("n") * col("cn")), 6)
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cent_id").asc)
-    val ranked = vecs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cent_id"), csim.as("csim"))
-      .withColumn("crn", row_number().over(w))
+    val ranked = centroidRanks(vecs, cents)
     val cells = ranked.filter(col("crn") === 1)
       .select(col("vec_id").as("cid"), col("cent_id").as("cell"))
     val probed = ranked.filter(col("vec_id") < queryBound && col("crn") <= probes)
@@ -369,94 +359,19 @@ object SimSearch {
       .join(broadcast(vecs.filter(col("vec_id") < queryBound)
         .select(col("vec_id").as("qid"), col("v").as("qv"), col("n").as("qn"))), "qid")
       .join(vecs.select(col("vec_id").as("cid"), col("v").as("cv"), col("n").as("cn")), "cid")
-    rerank(pairs, ndot)
+    rerank(pairs)
   }
 
-  /** Deterministic spherical k-means centroids for the IVF index
-    * (Lloyd's iterations): hash-spread init (the K smallest
-    * `xxhash64(vec_id)` vectors), cosine assignment with the same
-    * rounded-sim/centroid-id tiebreak as the index itself, elementwise
-    * mean update. Where it matters: on CLUSTERED embeddings (the real
-    * case) first-K-vectors centroids ([[ivfTopK]]) inherit the data's
-    * insertion order — if early ids share a cluster, every cell is a
-    * noise-slice of that cluster and probing finds nothing — while
-    * trained centroids recover the true cells (`SimSearchSpec` builds
-    * such a corpus and pins the gap). On structureless near-uniform
-    * data (the adversarial fixture) NO centroid choice helps: measured
-    * trained ≈ first-K at every probe count (PLANS_r05.md), which is the
-    * information-theoretic reality, not a training defect.
+  /** Parameter-LOCKED trained centroids for the IVF index: k-means
+    * cells with a full cross-engine oracle. Where training matters: on
+    * CLUSTERED embeddings (the real case) first-K-vectors centroids
+    * ([[ivfTopK]]) inherit the data's insertion order — if early ids
+    * share a cluster, every cell is a noise-slice of that cluster and
+    * probing finds nothing — while trained centroids recover the true
+    * cells (`SimSearchSpec` builds such a corpus and pins the gap). On
+    * structureless near-uniform data (the adversarial fixture) no
+    * centroid choice helps (PLANS_r05.md).
     *
-    * Scale shape: centroids BROADCAST each round; assignment is a
-    * map-side-combined `max(struct(sim, -cent_id))` per vector — the
-    * exchange carries one row per vector, not per (vector, centroid);
-    * the mean update shuffles N×dim skinny (cell, pos, x) rows of the
-    * TRAINING SAMPLE only (`sampleEvery` hash-samples the corpus —
-    * k-means needs a bounded sample, not 100 TB); sums ride
-    * decimal(28,10) so the result is bit-deterministic under any
-    * partial-aggregation order. Lineage is cut per round
-    * (localCheckpoint on K rows).
-    */
-  def trainCentroids(emb: DataFrame, k: Int, iters: Int = 5,
-      sampleEvery: Int = 1): DataFrame = {
-    require(k >= 1 && iters >= 0 && sampleEvery >= 1,
-      s"bad k-means config: k=$k iters=$iters sampleEvery=$sampleEvery")
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val all = emb.select(col("vec_id"), col("embedding").as("v"))
-    val sample = (if (sampleEvery == 1) all
-      else all.filter(pmod(xxhash64(col("vec_id")), lit(sampleEvery.toLong)) === 0L))
-      .cache()
-    val initW = Window.orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    var cents = sample
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
-      .select((row_number().over(initW) - 1).cast("long").as("cent_id"),
-        col("v").cast("array<double>").as("cv"))
-      .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val c = broadcast(cents.select(col("cent_id"), col("cv"),
-        sqrt(ndot(col("cv"), col("cv"))).as("cn")))
-      val csim = round(
-        ndot(col("v"), col("cv")) / (sqrt(ndot(col("v"), col("v"))) * col("cn")), 6)
-      val assigned = sample.crossJoin(c)
-        .select(col("vec_id"), col("v"),
-          struct(csim.as("s"), (-col("cent_id")).as("nc")).as("sc"))
-        .groupBy(col("vec_id"))
-        .agg(max(col("sc")).as("m"), first(col("v")).as("v"))
-        .select((-col("m.nc")).as("cell"), col("v"))
-      val means = assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("x").cast("decimal(28,10)")).as("sx"), count(lit(1)).as("cnt"))
-        .groupBy(col("cell"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"),
-            (col("sx") / col("cnt")).cast("double").as("m")))),
-          e => e.getField("m")).as("cv2"))
-      // A cell that lost every point keeps its previous centroid.
-      cents = cents.join(means, cents("cent_id") === means("cell"), "left")
-        .select(col("cent_id"), coalesce(col("cv2"), col("cv")).as("cv"))
-        .localCheckpoint()
-    }
-    sample.unpersist()
-    cents.select(col("cent_id"), col("cv"), sqrt(ndot(col("cv"), col("cv"))).as("cn"))
-  }
-
-  /** IVF top-1 with k-means-trained centroids. No cross-engine oracle
-    * (the trained centroids are data/iteration-dependent);
-    * `SimSearchSpec` bounds top-1 agreement vs brute force at HALF the
-    * fixture probe count the first-K index needs, and determinism.
-    */
-  def ivfTopKTrained(emb: DataFrame, queryBound: Int, p: IvfParams,
-      iters: Int = 5, sampleEvery: Int = 1): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-      sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
-    ivfWithCentroids(vecs, queryBound, p.probes,
-      trainCentroids(emb, p.numCentroids, iters, sampleEvery))
-  }
-
-  /** Parameter-LOCKED trained centroids — the missing piece between
-    * first-K centroids (oracle-replicable, weak cells) and
-    * [[trainCentroids]] (k-means cells, no cross-engine oracle):
     * Lloyd's iterations unrolled a FIXED count over the unit-quantized
     * INTEGER vectors ([[quantizeUnit]] — already proven
     * oracle-compatible by the q8/PQ oracles), first-K init, and
@@ -469,17 +384,16 @@ object SimSearch {
     * trained path carries a full rows+schema+hash oracle instead of a
     * recall bound.
     *
-    * Scale shape matches [[trainCentroids]]: centroids broadcast each
-    * round; assignment is a map-side-combined max(struct) per vector;
-    * the update shuffles skinny (cell, pos, x) rows; lineage cut per
-    * round. Element sums stay exact while N·127 < 2^53 (N ≈ 7·10¹³
-    * vectors — beyond any single index shard).
+    * Scale shape: centroids BROADCAST each round; assignment is a
+    * map-side-combined `max(struct(sim, -cent_id))` per vector — the
+    * exchange carries one row per vector, not per (vector, centroid);
+    * the update shuffles skinny (cell, pos, x) rows; lineage is cut per
+    * round (localCheckpoint on K rows). Element sums stay exact while
+    * N·127 < 2^53 (N ≈ 7·10¹³ vectors — beyond any single index shard).
     */
   def trainCentroidsLocked(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 0, s"bad locked k-means config: k=$k iters=$iters")
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val u = emb.select(col("vec_id"),
-      quantizeUnit(col("embedding"), ndot).as("u"))
+    val u = emb.select(col("vec_id"), quantizeUnit(col("embedding")).as("u"))
     val init = u.filter(col("vec_id") < k)
       .select(col("vec_id").as("cent_id"), col("u").as("cu"))
       .localCheckpoint()
@@ -510,9 +424,8 @@ object SimSearch {
       sampleEvery: Int): DataFrame = {
     require(k >= 1 && iters >= 0 && sampleEvery >= 1,
       s"bad sampled locked k-means config: k=$k iters=$iters sampleEvery=$sampleEvery")
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
     val u = emb.filter(col("vec_id") % sampleEvery === 0)
-      .select(col("vec_id"), quantizeUnit(col("embedding"), ndot).as("u"))
+      .select(col("vec_id"), quantizeUnit(col("embedding")).as("u"))
     val init = u.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("cent_id"), col("u").as("cu"))
       .localCheckpoint()
@@ -541,7 +454,6 @@ object SimSearch {
     * replays bit-for-bit in DuckDB.
     */
   private def lockedLloyd(u: DataFrame, init: DataFrame, iters: Int): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(u.sparkSession)
     var cents = init
     for (_ <- 0 until iters) {
       val c = broadcast(cents.select(col("cent_id"), col("cu"),
@@ -573,40 +485,6 @@ object SimSearch {
       sqrt(ndot(col("cu"), col("cu"))).as("cn"))
   }
 
-  /** IVF top-1 over [[trainCentroidsLocked]] cells: the trained-index
-    * deployment shape WITH a full cross-engine oracle.
-    */
-  def ivfTopKTrainedLocked(emb: DataFrame, queryBound: Int, p: IvfParams,
-      iters: Int): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-      sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
-    ivfWithCentroids(vecs, queryBound, p.probes,
-      trainCentroidsLocked(emb, p.numCentroids, iters))
-  }
-
-  /** Shared oracle prelude for every locked-training replay: raw
-    * vectors `d`, quantized `u`, first-K init `c0`, and the unrolled
-    * Lloyd iterations `c1..c<iters>` (sum-vector centroids, empty
-    * cells keep their codeword).
-    */
-  /** The locked-training K as SQL, from the corpus itself: the same
-    * clamp(⌈√N⌉, 16, 65536) rule as [[IvfParams.forCorpus]], computed
-    * inside the oracle so a regenerated or rescaled fixture retunes
-    * BOTH sides identically. sqrt/ceil are IEEE-exact in both engines.
-    */
-  private def trainedCentroidCtes(iters: Int, dim: Int): String =
-    trainedCentroidCtesWhere(iters, dim, "TRUE")
-
-  /** [[trainedCentroidCtes]] with the TRAINING corpus restricted by a
-    * SQL predicate over the embeddings columns (`baseWhere`): `kk`
-    * derives K from the base count, `u` (the quantized training set,
-    * hence `c0..c<iters>`) carries base rows only, while `d` stays the
-    * FULL corpus — serving replays (assignment/probe/re-rank) run over
-    * everything, which is exactly the retrain-free upsert contract
-    * ([[graft.ext.IvfIndex]]): late vectors are assigned to centroids
-    * they never influenced.
-    */
   /** The unrolled Lloyd iterations `c1..c<iters>` as SQL — shared by
     * every locked-training replay (full, base-restricted, sampled):
     * assignment ranks, exact integer cell sums, empty cells keep their
@@ -626,8 +504,24 @@ object SimSearch {
          |  FROM c${i - 1} LEFT JOIN l$i ON cent_id = cell)""".stripMargin
     }.mkString(",\n", ",\n", "")
 
+  /** Shared oracle prelude for every locked-training replay
+    * ([[trainCentroidsLocked]]): raw vectors `d`, quantized `u`, the
+    * locked-training K `kk`, first-K init `c0`, and the unrolled Lloyd
+    * iterations `c1..c<iters>`. `kk` is the same clamp(⌈√N⌉, 16, 65536)
+    * rule as [[IvfParams.forCorpus]], computed inside the oracle so a
+    * regenerated or rescaled fixture retunes BOTH sides identically
+    * (sqrt/ceil are IEEE-exact in both engines).
+    *
+    * `baseWhere` restricts the TRAINING corpus by a SQL predicate over
+    * the embeddings columns: `kk` derives K from the base count, `u`
+    * (hence `c0..c<iters>`) carries base rows only, while `d` stays the
+    * FULL corpus — serving replays (assignment/probe/re-rank) run over
+    * everything, which is exactly the retrain-free upsert contract
+    * ([[graft.ext.IvfIndex]]): late vectors are assigned to centroids
+    * they never influenced.
+    */
   private[ext] def trainedCentroidCtesWhere(iters: Int, dim: Int,
-      baseWhere: String): String = {
+      baseWhere: String = "TRUE"): String = {
     val iterCtes = lockedIterCtes(iters, dim)
     s"""kk AS (SELECT greatest(16, least(65536,
        |  CAST(ceil(sqrt(count(*))) AS BIGINT))) AS k FROM embeddings WHERE $baseWhere),
@@ -662,45 +556,34 @@ object SimSearch {
        |          row_number() OVER (ORDER BY vec_id) AS rn FROM u)
        |       WHERE rn <= (SELECT k FROM kk))${lockedIterCtes(iters, dim)}""".stripMargin
 
-  /** Semantic corpus clustering — every vector's cell under the
-    * locked-trained centroids, with the rounded assignment cosine.
-    * The curation primitive behind topic balancing, per-cluster
-    * sampling, and cluster-aware dedup; same plan as the IVF index
-    * build (broadcast centroids, map-side-combined argmax — the
-    * corpus never shuffles). Fully oracle-checked via the training
-    * replay.
+  /** Semantic corpus clustering — every vector's cell under an
+    * explicit centroid table (`cent_id`, `cv`, `cn`: the
+    * [[trainCentroidsLocked]] output, typically landed — train once,
+    * assign in every serving query), with the rounded assignment
+    * cosine. The curation primitive behind topic balancing,
+    * per-cluster sampling, and cluster-aware dedup; same plan as the
+    * IVF index build (broadcast centroids, map-side-combined argmax —
+    * the corpus never shuffles). Fully oracle-checked via the training
+    * replay ([[clusterAssignOracleSql]]).
     */
-  def clusterAssign(emb: DataFrame, k: Int, iters: Int): DataFrame =
-    clusterAssignWithCentroids(emb, trainCentroidsLocked(emb, k, iters))
-
-  /** [[clusterAssign]] against an explicit (typically landed) centroid
-    * table — train once offline, assign in every serving query.
-    */
-  def clusterAssignWithCentroids(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val csim = round(
-      ndot(col("v"), col("cv")) / (col("n") * col("cn")), 6)
-    emb.select(col("vec_id"), col("embedding").as("v"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
+  def clusterAssignWithCentroids(emb: DataFrame, cents: DataFrame): DataFrame =
+    normed(emb, "vec_id", "v", "n")
       .crossJoin(broadcast(cents))
       .select(col("vec_id"),
-        struct(csim.as("s"), (-col("cent_id")).as("nc")).as("sc"))
+        struct(cos6("v", "cv", "n", "cn").as("s"), (-col("cent_id")).as("nc")).as("sc"))
       .groupBy(col("vec_id"))
       .agg(max(col("sc")).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("cluster_id"),
         col("m.s").as("sim"))
-  }
 
-  /** [[ivfTopKTrainedLocked]] against an explicit (typically landed)
-    * centroid table (`cent_id`, `cv`, `cn`).
+  /** IVF top-1 over an explicit centroid table (`cent_id`, `cv`, `cn`):
+    * [[trainCentroidsLocked]] / [[trainCentroidsLockedSampled]] output,
+    * typically landed — the trained-index deployment shape with a full
+    * cross-engine oracle ([[ivfTrainedOracleSql]]).
     */
   def ivfTopKWithCentroids(emb: DataFrame, queryBound: Int, probes: Int,
-      cents: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-      sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
-    ivfWithCentroids(vecs, queryBound, probes, cents)
-  }
+      cents: DataFrame): DataFrame =
+    ivfWithCentroids(normed(emb, "vec_id", "v", "n"), queryBound, probes, cents)
 
   /** FILTERED IVF ANN — the 100 TB serving shape for predicate +
     * vector search: the metadata predicate is composed INTO the
@@ -724,24 +607,11 @@ object SimSearch {
     */
   def ivfTopKNFilteredWithCentroids(emb: DataFrame, queryBound: Int, k: Int,
       probes: Int, cents: DataFrame, candWhere: Column): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val bc = broadcast(cents)
-    def vecsOf(df: DataFrame): DataFrame =
-      df.select(col("vec_id"), col("embedding").as("v"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
-    def ranked(src: DataFrame): DataFrame = {
-      val csim = round(ndot(col("v"), col("cv")) / (col("n") * col("cn")), 6)
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("csim").desc, col("cent_id").asc)
-      src.crossJoin(bc)
-        .select(col("vec_id"), col("cent_id"), csim.as("csim"))
-        .withColumn("crn", row_number().over(w))
-    }
-    val eligible = vecsOf(emb.filter(candWhere))
-    val queries = vecsOf(emb.filter(col("vec_id") < queryBound))
-    val cells = ranked(eligible).filter(col("crn") === 1)
+    val eligible = normed(emb.filter(candWhere), "vec_id", "v", "n")
+    val queries = normed(emb.filter(col("vec_id") < queryBound), "vec_id", "v", "n")
+    val cells = centroidRanks(eligible, cents).filter(col("crn") === 1)
       .select(col("vec_id").as("cid"), col("cent_id").as("cell"))
-    val probed = ranked(queries).filter(col("crn") <= probes)
+    val probed = centroidRanks(queries, cents).filter(col("crn") <= probes)
       .select(col("vec_id").as("qid"), col("cent_id").as("cell"))
     // Multi-probe duplicates collapse BEFORE the exact re-rank (a
     // duplicated pair would otherwise occupy two ranks).
@@ -753,12 +623,7 @@ object SimSearch {
         col("v").as("qv"), col("n").as("qn"))), "qid")
       .join(eligible.select(col("vec_id").as("cid"),
         col("v").as("cv"), col("n").as("cn")), "cid")
-    val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    pairs
-      .select(col("qid"), col("cid"),
-        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+    topKPerQuery(pairs.select(col("qid"), col("cid"), cos6("qv", "cv", "qn", "cn").as("sim")), k)
   }
 
   /** DuckDB twin of [[ivfTopKNFilteredWithCentroids]] under the
@@ -768,7 +633,7 @@ object SimSearch {
     */
   def ivfTrainedFilteredOracleSql(queryBound: Int, k: Int, iters: Int,
       dim: Int, candWhere: String): String =
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |el AS (SELECT vec_id FROM embeddings e WHERE $candWhere),
        |r AS (SELECT d.vec_id, cent_id,
        |        row_number() OVER (PARTITION BY d.vec_id
@@ -805,22 +670,15 @@ object SimSearch {
     * function of the data and fully oracle-replayable.
     */
   def knnGraph(emb: DataFrame, k: Int, cents: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
     val cells = clusterAssignWithCentroids(emb, cents)
       .select(col("vec_id"), col("cluster_id").as("cell"))
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
-      .join(cells, "vec_id")
+    val vecs = normed(emb, "vec_id", "v", "n").join(cells, "vec_id")
     val a = vecs.select(col("cell"), col("vec_id").as("qid"),
       col("v").as("qv"), col("n").as("qn"))
     val b = vecs.select(col("cell"), col("vec_id").as("cid"),
       col("v").as("cv"), col("n").as("cn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    a.join(b, Seq("cell")).filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(a.join(b, Seq("cell")).filter(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), cos6("qv", "cv", "qn", "cn").as("sim")), k)
   }
 
   /** SemDeDup-style semantic dedup: within each locked-centroid
@@ -842,21 +700,16 @@ object SimSearch {
     */
   def semanticDedup(emb: DataFrame, threshold: Double,
       cents: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
     val cells = clusterAssignWithCentroids(emb, cents)
       .select(col("vec_id"), col("cluster_id").as("cell"))
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
-      .join(cells, "vec_id")
+    val vecs = normed(emb, "vec_id", "v", "n").join(cells, "vec_id")
     val a = vecs.select(col("cell"), col("vec_id").as("id_a"),
       col("v").as("v_a"), col("n").as("n_a"))
     val b = vecs.select(col("cell"), col("vec_id").as("id_b"),
       col("v").as("v_b"), col("n").as("n_b"))
     val dropped = a.join(b, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_b"),
-        round(ndot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 6)
-          .as("sim"))
+      .select(col("id_b"), cos6("v_a", "v_b", "n_a", "n_b").as("sim"))
       .filter(col("sim") >= threshold)
       .select(col("id_b")).distinct()
     cells.join(dropped, cells("vec_id") === dropped("id_b"), "left_anti")
@@ -874,7 +727,6 @@ object SimSearch {
     */
   def semanticDedupBest(emb: DataFrame, threshold: Double,
       cents: DataFrame, qualityCol: String): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
     val cells = clusterAssignWithCentroids(emb, cents)
       .select(col("vec_id"), col("cluster_id").as("cell"))
     val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
@@ -888,9 +740,7 @@ object SimSearch {
     val dropped = a.join(b, Seq("cell"))
       .filter(col("q_a") > col("q_b") ||
         (col("q_a") === col("q_b") && col("id_a") < col("id_b")))
-      .select(col("id_b"),
-        round(ndot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 6)
-          .as("sim"))
+      .select(col("id_b"), cos6("v_a", "v_b", "n_a", "n_b").as("sim"))
       .filter(col("sim") >= threshold)
       .select(col("id_b")).distinct()
     vecs.join(dropped, vecs("vec_id") === dropped("id_b"), "left_anti")
@@ -923,21 +773,16 @@ object SimSearch {
     */
   def nearDupPairsCells(emb: DataFrame, threshold: Double,
       cents: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
     val cells = clusterAssignWithCentroids(emb, cents)
       .select(col("vec_id"), col("cluster_id").as("cell"))
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
-      .join(cells, "vec_id")
+    val vecs = normed(emb, "vec_id", "v", "n").join(cells, "vec_id")
     val a = vecs.select(col("cell"), col("vec_id").as("id_a"),
       col("v").as("v_a"), col("n").as("n_a"))
     val b = vecs.select(col("cell"), col("vec_id").as("id_b"),
       col("v").as("v_b"), col("n").as("n_b"))
     a.join(b, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(ndot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 6)
-          .as("sim"))
+      .select(col("id_a"), col("id_b"), cos6("v_a", "v_b", "n_a", "n_b").as("sim"))
       .filter(col("sim") >= threshold)
   }
 
@@ -945,7 +790,7 @@ object SimSearch {
     * assignment + in-cell exact pairs.
     */
   def nearDupCellsOracleSql(threshold: Double, iters: Int, dim: Int): String =
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |r AS (SELECT d.vec_id, cent_id,
        |        row_number() OVER (PARTITION BY d.vec_id
        |          ORDER BY round(list_cosine_similarity(d.v, cu), 6) DESC, cent_id) AS crn
@@ -964,7 +809,7 @@ object SimSearch {
     */
   def contrastiveTripletsCellsOracleSql(
       threshold: Double, iters: Int, dim: Int): String =
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |r AS (SELECT d.vec_id, cent_id,
        |        row_number() OVER (PARTITION BY d.vec_id
        |          ORDER BY round(list_cosine_similarity(d.v, cu), 6) DESC, cent_id) AS crn
@@ -987,7 +832,7 @@ object SimSearch {
   /** DuckDB oracle for [[semanticDedupBest]]. */
   def semanticDedupBestOracleSql(threshold: Double,
       iters: Int, dim: Int, qualityCol: String): String =
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |r AS (SELECT d.vec_id, cent_id,
        |        row_number() OVER (PARTITION BY d.vec_id
        |          ORDER BY round(list_cosine_similarity(d.v, cu), 6) DESC, cent_id) AS crn
@@ -1009,7 +854,7 @@ object SimSearch {
     */
   def semanticDedupOracleSql(threshold: Double, iters: Int,
       dim: Int): String =
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |r AS (SELECT d.vec_id, cent_id,
        |        row_number() OVER (PARTITION BY d.vec_id
        |          ORDER BY round(list_cosine_similarity(d.v, cu), 6) DESC, cent_id) AS crn
@@ -1027,7 +872,7 @@ object SimSearch {
     * top-k.
     */
   def knnGraphOracleSql(k: Int, iters: Int, dim: Int): String =
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |r AS (SELECT d.vec_id, cent_id,
        |        row_number() OVER (PARTITION BY d.vec_id
        |          ORDER BY round(list_cosine_similarity(d.v, cu), 6) DESC, cent_id) AS crn
@@ -1046,7 +891,7 @@ object SimSearch {
     * replay + argmax assignment + the staged-LCG bucket of cluster_id.
     */
   def leakageSafeSplitOracleSql(iters: Int, dim: Int): String =
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |r AS (SELECT d.vec_id, cent_id,
        |        row_number() OVER (PARTITION BY d.vec_id
        |          ORDER BY round(list_cosine_similarity(d.v, cu), 6) DESC, cent_id) AS crn
@@ -1060,9 +905,11 @@ object SimSearch {
        |       ELSE 'test' END AS split
        |FROM cell""".stripMargin
 
-  /** DuckDB oracle for [[clusterAssign]]: training replay + argmax. */
+  /** DuckDB oracle for [[clusterAssignWithCentroids]] over
+    * [[trainCentroidsLocked]] centroids: training replay + argmax.
+    */
   def clusterAssignOracleSql(iters: Int, dim: Int): String =
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |r AS (SELECT d.vec_id, cent_id,
        |        round(list_cosine_similarity(d.v, cu), 6) AS sim,
        |        row_number() OVER (PARTITION BY d.vec_id
@@ -1070,12 +917,13 @@ object SimSearch {
        |      FROM d CROSS JOIN c$iters)
        |SELECT vec_id, cent_id AS cluster_id, sim FROM r WHERE crn = 1""".stripMargin
 
-  /** DuckDB oracle for [[ivfTopKTrainedLocked]]: replays quantization,
+  /** DuckDB oracle for [[ivfTopKWithCentroids]] over
+    * [[trainCentroidsLocked]] centroids: replays quantization,
     * the unrolled Lloyd iterations, final cell assignment, probing,
     * and the exact re-rank.
     */
   def ivfTrainedOracleSql(queryBound: Int, iters: Int, dim: Int): String = {
-    s"""WITH ${trainedCentroidCtes(iters, dim)},
+    s"""WITH ${trainedCentroidCtesWhere(iters, dim)},
        |r AS (SELECT d.vec_id, cent_id,
        |        row_number() OVER (PARTITION BY d.vec_id
        |          ORDER BY round(list_cosine_similarity(d.v, cu), 6) DESC, cent_id) AS crn
@@ -1142,19 +990,6 @@ object SimSearch {
        |SELECT qid, cid, sim FROM rr WHERE rn = 1""".stripMargin
   }
 
-  /** Shared exact re-rank over (qid, cid, qv, cv, qn, cn) pairs:
-    * deterministic cosine (round 6, cid tiebreak), top-1 per query.
-    */
-  private def rerank(pairs: DataFrame, ndot: (Column, Column) => Column): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    pairs
-      .select(col("qid"), col("cid"),
-        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("qid"), col("cid"), col("sim"))
-  }
-
   /** Embedding-cosine near-duplicate pairs: LSH-candidate pairs
     * (id_a < id_b sharing ≥1 band bucket) with exact cosine ≥
     * threshold. The dedup analog of [[lshTopK]] — candidates from
@@ -1175,14 +1010,9 @@ object SimSearch {
         Seq("band", "bkey"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val sides = Seq("a", "b").map { s =>
-      emb.select(col("vec_id").as(s"id_$s"), col("embedding").as(s"v_$s"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as(s"n_$s"))
-    }
-    cand.join(sides(0), "id_a").join(sides(1), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(ndot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")), 6).as("sim"))
+    cand.join(normed(emb, "id_a", "v_a", "n_a"), "id_a")
+      .join(normed(emb, "id_b", "v_b", "n_b"), "id_b")
+      .select(col("id_a"), col("id_b"), cos6("v_a", "v_b", "n_a", "n_b").as("sim"))
       .filter(col("sim") >= threshold)
       .distinct()
   }
@@ -1238,7 +1068,7 @@ object SimSearch {
 
   /** Contrastive (anchor, positive, negative) triplet mining — the
     * training-data prep for embedding/retrieval models: each near-dup
-    * pair contributes its members as anchor/positive, and the negative
+    * pair ([[nearDupPairsCells]] / [[nearDupPairs]] output) contributes its members as anchor/positive, and the negative
     * is drawn DETERMINISTICALLY from the pair list itself (the member
     * of the pair half the list away, in (id_a, id_b) order) — no
     * randomness state, exact across engines. A triplet is dropped if
@@ -1251,14 +1081,10 @@ object SimSearch {
     * touched again. Caveat (documented, fixture-acceptable): a drawn
     * negative from a chained dup family could share the anchor's
     * cluster; a production variant adds a cluster-disjointness filter.
-    */
-  def contrastiveTriplets(emb: DataFrame, threshold: Double,
-      p: LshParams): DataFrame =
-    contrastiveTripletsFromPairs(nearDupPairs(emb, threshold, p))
-
-  /** [[contrastiveTriplets]] over a precomputed (typically landed)
-    * pair table — the serve shape when the pair mining is shared with
-    * the near-dup query.
+    *
+    * Runs over a precomputed (typically landed) (id_a, id_b, sim) pair
+    * table — the serve shape when the pair mining is shared with the
+    * near-dup query.
     */
   def contrastiveTripletsFromPairs(pairs: DataFrame): DataFrame = {
     val w = Window.orderBy(col("id_a"), col("id_b"))
@@ -1292,18 +1118,6 @@ object SimSearch {
       transform(d, x => floor(x / s + lit(0.5)).cast("byte")).as("q"))
   }
 
-  /** Quantized brute-force cosine top-1 — [[bruteTopK]]'s contract on
-    * int8 codes. The per-vector scale cancels out of the cosine, so
-    * scoring is pure integer arithmetic widened to double: dot and
-    * norms are exact integers (|code| ≤ 127, dim 64 → |dot| ≤ ~10⁶,
-    * far inside double's exact-integer range), making the scores
-    * bit-reproducible by the oracle regardless of summation order.
-    * sqrt(qn*cn) as ONE sqrt (not sqrt·sqrt): both engines compute the
-    * identical IEEE operation sequence.
-    */
-  def q8TopK(emb: DataFrame, queryBound: Int): DataFrame =
-    q8TopKFromCodes(quantizeCorpus(emb), queryBound)
-
   /** The q8 index build: (vec_id, scale, q) with tinyint codes — this
     * is what gets persisted once and queried many times; the scale
     * column rides along for dot-product (non-cosine) reconstruction.
@@ -1312,26 +1126,29 @@ object SimSearch {
     emb.select(col("vec_id"), quantizeQ8(col("embedding")).as("z"))
       .select(col("vec_id"), col("z.scale").as("scale"), col("z.q").as("q"))
 
-  /** Top-1 over a prebuilt q8 code table ([[quantizeCorpus]] output,
-    * typically landed to parquet): per-query cost is one streamed pass
-    * over codes that are 4× smaller than the float corpus — the
-    * quantization itself is paid at index-build time, not per query.
+  /** Quantized brute-force cosine top-1 — [[bruteTopK]]'s contract on
+    * int8 codes, over a prebuilt q8 code table ([[quantizeCorpus]]
+    * output, typically landed to parquet): per-query cost is one
+    * streamed pass over codes that are 4× smaller than the float corpus
+    * — the quantization itself is paid at index-build time, not per
+    * query. The per-vector scale cancels out of the cosine, so
+    * scoring is pure integer arithmetic widened to double: dot and
+    * norms are exact integers (|code| ≤ 127, dim 64 → |dot| ≤ ~10⁶,
+    * far inside double's exact-integer range), making the scores
+    * bit-reproducible by the oracle regardless of summation order.
+    * sqrt(qn*cn) as ONE sqrt (not sqrt·sqrt): both engines compute the
+    * identical IEEE operation sequence.
     */
   def q8TopKFromCodes(codes: DataFrame, queryBound: Int): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(codes.sparkSession)
     val z = codes
       .select(col("vec_id"), col("q").cast("array<double>").as("qd"))
       .select(col("vec_id"), col("qd"), ndot(col("qd"), col("qd")).as("nrm"))
     val q = z.filter(col("vec_id") < queryBound)
       .select(col("vec_id").as("qid"), col("qd").as("qv"), col("nrm").as("qn"))
     val c = z.select(col("vec_id").as("cid"), col("qd").as("cv"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    broadcast(q).join(c, col("qid") =!= col("cid"))
+    top1PerQuery(broadcast(q).join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        round(ndot(col("qv"), col("cv")) / sqrt(col("qn") * col("cn")), 6).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("qid"), col("cid"), col("sim"))
+        round(ndot(col("qv"), col("cv")) / sqrt(col("qn") * col("cn")), 6).as("sim")))
   }
 
   // ---- product quantization (ADC) ----
@@ -1355,7 +1172,7 @@ object SimSearch {
     * oracle's list_dot_product reproduces it bit-for-bit; every
     * operation after the floor is exact integer arithmetic.
     */
-  def quantizeUnit(v: Column, ndot: (Column, Column) => Column): Column = {
+  def quantizeUnit(v: Column): Column = {
     val d = transform(v, x => x.cast("double"))
     // The norm sits INSIDE the per-element lambda (Catalyst re-evaluates
     // outer expressions per element), so it must be the codegen'd dot —
@@ -1374,8 +1191,7 @@ object SimSearch {
   private def pqSubs(emb: DataFrame, dim: Int): DataFrame = {
     require(dim % PqM == 0, s"dim $dim not divisible by $PqM subspaces")
     val sub = dim / PqM
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    emb.select(col("vec_id"), quantizeUnit(col("embedding"), ndot).as("u"))
+    emb.select(col("vec_id"), quantizeUnit(col("embedding")).as("u"))
       .select(col("vec_id"), posexplode(
         transform(sequence(lit(0), lit(PqM - 1)),
           m => slice(col("u"), m * sub + 1, lit(sub)))))
@@ -1385,22 +1201,11 @@ object SimSearch {
   /** First-K per-subspace codebook: (m, cw, cs) — K·M rows, always
     * broadcast. Parameter-locked (codewords = the unit-quantized
     * subvectors of the first K vectors by id) so the oracle can replay
-    * it; [[trainPqCodebooks]] is the quality upgrade with the same
-    * schema.
+    * it.
     */
   private[graft] def pqCodebook(emb: DataFrame, dim: Int): DataFrame =
     pqSubs(emb.filter(col("vec_id") < PqK), dim)
       .select(col("m"), col("vec_id").as("cw"), col("us").as("cs"))
-
-  /** Codeword self-dots, materialized BEFORE the broadcast so the
-    * encode join pays ONE dot per candidate pair: argmin_j ‖u − c_j‖²
-    * = argmin_j (cs2_j − 2⟨u, c_j⟩) — the u² term is constant within a
-    * (vector, subspace) group and cannot move the argmin or its ties.
-    */
-  private def withCs2(cb: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(cb.sparkSession)
-    cb.select(col("m"), col("cw"), col("cs"), ndot(col("cs"), col("cs")).as("cs2"))
-  }
 
   /** PQ encoding: each vector compresses to M single-byte codes — the
     * nearest codeword (integer L2, ties to the smallest id) per
@@ -1413,15 +1218,14 @@ object SimSearch {
     * exchange, so the shuffle carries one skinny row per (vector,
     * subspace), never the candidate cross product.
     */
-  def pqEncode(emb: DataFrame, dim: Int): DataFrame =
-    pqEncodeWith(emb, dim, pqCodebook(emb, dim))
-
-  /** Encode against an explicit codebook ((m, cw, cs) — first-K or
-    * [[trainPqCodebooks]] output).
-    */
-  def pqEncodeWith(emb: DataFrame, dim: Int, codebook: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    pqSubs(emb, dim).join(broadcast(withCs2(codebook)), Seq("m"))
+  def pqEncode(emb: DataFrame, dim: Int): DataFrame = {
+    // Codeword self-dots, materialized BEFORE the broadcast so the
+    // encode join pays ONE dot per candidate pair: argmin_j ‖u − c_j‖²
+    // = argmin_j (cs2_j − 2⟨u, c_j⟩) — the u² term is constant within a
+    // (vector, subspace) group and cannot move the argmin or its ties.
+    val codebook = pqCodebook(emb, dim)
+      .select(col("m"), col("cw"), col("cs"), ndot(col("cs"), col("cs")).as("cs2"))
+    pqSubs(emb, dim).join(broadcast(codebook), Seq("m"))
       .select(col("vec_id"), col("m"), col("cw"),
         (col("cs2") - lit(2.0) * ndot(col("us"), col("cs"))).as("d2"))
       .groupBy(col("vec_id"), col("m"))
@@ -1449,7 +1253,7 @@ object SimSearch {
     */
   def pqTopKFromCodes(codes: DataFrame, emb: DataFrame, queryBound: Int,
       dim: Int, shortlist: Int = 20): DataFrame =
-    pqSearch(codes, emb, queryBound, dim, shortlist, pqCodebook(emb, dim))
+    pqTopKFromCodes(codes, emb, queryBound, dim, shortlist, pqCodebook(emb, dim))
 
   /** [[pqTopKFromCodes]] against an EXPLICIT codebook table ((m, cw,
     * cs) — typically landed next to the codes as part of the index
@@ -1459,17 +1263,20 @@ object SimSearch {
     */
   def pqTopKFromCodes(codes: DataFrame, emb: DataFrame, queryBound: Int,
       dim: Int, shortlist: Int, codebook: DataFrame): DataFrame =
-    pqSearch(codes, emb, queryBound, dim, shortlist, codebook)
+    rerank(withVectors(
+      adcShortlist(codes, emb, queryBound, dim, shortlist, codebook), emb, queryBound))
 
-  private def pqSearch(codes: DataFrame, emb: DataFrame, queryBound: Int,
+  /** The ADC stage of PQ search: per query, the top-`shortlist` (qid,
+    * cid) candidates of a (vec_id, m, code) table by integer LUT score.
+    */
+  private def adcShortlist(codes: DataFrame, emb: DataFrame, queryBound: Int,
       dim: Int, shortlist: Int, codebook: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
     val lut = pqSubs(emb.filter(col("vec_id") < queryBound), dim)
       .join(codebook, Seq("m"))
       .select(col("vec_id").as("qid"), col("m"), col("cw"),
         ndot(col("us"), col("cs")).as("dp"))
     val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid").asc)
-    val cand = codes.join(broadcast(lut),
+    codes.join(broadcast(lut),
         codes("m") === lut("m") && codes("code") === lut("cw"))
       .groupBy(col("qid"), codes("vec_id").as("cid"))
       .agg(sum(col("dp")).as("score"))
@@ -1477,13 +1284,6 @@ object SimSearch {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= shortlist)
       .select("qid", "cid")
-    val pairs = cand
-      .join(broadcast(emb.filter(col("vec_id") < queryBound)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-          sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))), "qid")
-      .join(emb.select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("cn")), "cid")
-    rerank(pairs, ndot)
   }
 
   /** Filtered PQ ANN serving — [[pqTopKFromCodes]] with the metadata
@@ -1509,114 +1309,13 @@ object SimSearch {
   def pqTopKNFilteredFromCodes(codes: DataFrame, emb: DataFrame,
       queryBound: Int, k: Int, dim: Int, candWhere: Column,
       shortlist: Int, codebook: DataFrame): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val codesF = codes.filter(candWhere)
-      .select(col("vec_id"), col("m"), col("code"))
-    val lut = pqSubs(emb.filter(col("vec_id") < queryBound), dim)
-      .join(codebook, Seq("m"))
-      .select(col("vec_id").as("qid"), col("m"), col("cw"),
-        ndot(col("us"), col("cs")).as("dp"))
-    val wS = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid").asc)
-    val cand = codesF.join(broadcast(lut),
-        codesF("m") === lut("m") && codesF("code") === lut("cw"))
-      .groupBy(col("qid"), codesF("vec_id").as("cid"))
-      .agg(sum(col("dp")).as("score"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("rn", row_number().over(wS))
-      .filter(col("rn") <= shortlist)
-      .select("qid", "cid")
-    val pairs = cand
-      .join(broadcast(emb.filter(col("vec_id") < queryBound)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-          sqrt(ndot(col("embedding"), col("embedding"))).as("qn"))), "qid")
-      .join(emb.select(col("vec_id").as("cid"), col("embedding").as("cv"),
-        sqrt(ndot(col("embedding"), col("embedding"))).as("cn")), "cid")
-    val w2 = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    pairs.select(col("qid"), col("cid"),
-        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+    val eligible = codes.filter(candWhere).select(col("vec_id"), col("m"), col("code"))
+    val cand = adcShortlist(eligible, emb, queryBound, dim, shortlist, codebook)
+    topKPerQuery(withVectors(cand, emb, queryBound)
+      .select(col("qid"), col("cid"), cos6("qv", "cv", "qn", "cn").as("sim")), k)
   }
 
-  /** One-stop PQ top-1 (encode + ADC + re-rank) for specs and small
-    * corpora.
-    */
-  def pqTopK(emb: DataFrame, queryBound: Int, dim: Int,
-      shortlist: Int = 20): DataFrame =
-    pqTopKFromCodes(pqEncode(emb, dim), emb, queryBound, dim, shortlist)
-
-  /** Per-subspace k-means codebooks — the quality upgrade over the
-    * parameter-locked first-K quantizer, exactly the
-    * [[trainCentroids]] trade for IVF: no cross-engine oracle (the
-    * codebooks are data/iteration-dependent) but fully deterministic —
-    * hash-seeded init per subspace, L2 assignment with integer-exact
-    * distances and smallest-id tie-breaks, mean updates summed in
-    * decimal(28,10) so partial-agg order cannot move a ulp.
-    *
-    * All M subspaces train in ONE DataFrame loop (subspace is just a
-    * grouping column): per round, codebooks broadcast, assignment is a
-    * map-side-combined argmin, and the mean update shuffles skinny
-    * (m, cell, pos, x) rows of the training sample only.
-    */
-  def trainPqCodebooks(emb: DataFrame, dim: Int, k: Int = PqK,
-      iters: Int = 3, sampleEvery: Int = 1): DataFrame = {
-    require(k >= 1 && iters >= 0 && sampleEvery >= 1,
-      s"bad PQ k-means config: k=$k iters=$iters sampleEvery=$sampleEvery")
-    val ndot = graft.functions.DotProduct.fn(emb.sparkSession)
-    val base = if (sampleEvery == 1) emb
-      else emb.filter(pmod(xxhash64(col("vec_id")), lit(sampleEvery.toLong)) === 0L)
-    val pts = pqSubs(base, dim).cache()
-    val wInit = Window.partitionBy(col("m"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    var cents = pts.withColumn("rn", row_number().over(wInit))
-      .filter(col("rn") <= k)
-      .select(col("m"), (col("rn") - 1).cast("long").as("cw"),
-        col("us").cast("array<double>").as("cs"))
-      .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val c = broadcast(withCs2(cents))
-      val assigned = pts.join(c, Seq("m"))
-        .select(col("vec_id"), col("m"), col("us"),
-          struct((col("cs2") - lit(2.0) * ndot(col("us"), col("cs"))).as("d"),
-            col("cw")).as("sc"))
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(col("sc")).as("a"), first(col("us")).as("us"))
-        .select(col("m"), col("a.cw").as("cell"), col("us"))
-      val means = assigned
-        .select(col("m"), col("cell"), posexplode(col("us")).as(Seq("pos", "x")))
-        .groupBy(col("m"), col("cell"), col("pos"))
-        .agg(sum(col("x").cast("decimal(28,10)")).as("sx"), count(lit(1)).as("cnt"))
-        .groupBy(col("m"), col("cell"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"),
-            (col("sx") / col("cnt")).cast("double").as("v")))),
-          e => e.getField("v")).as("cs2arr"))
-      // A cell that lost every point keeps its previous codeword.
-      cents = cents.alias("l")
-        .join(means.alias("r"),
-          col("l.m") === col("r.m") && col("l.cw") === col("r.cell"), "left")
-        .select(col("l.m").as("m"), col("l.cw").as("cw"),
-          coalesce(col("r.cs2arr"), col("l.cs")).as("cs"))
-        .localCheckpoint()
-    }
-    pts.unpersist()
-    cents
-  }
-
-  /** PQ top-1 with k-means codebooks: train → encode → ADC → re-rank.
-    * No cross-engine oracle (same policy as [[ivfTopKTrained]]);
-    * `SimSearchSpec` shows the raw-ADC win on a clustered corpus where
-    * first-K codewords all come from a few clusters.
-    */
-  def pqTopKTrained(emb: DataFrame, queryBound: Int, dim: Int,
-      shortlist: Int = 20, iters: Int = 3, sampleEvery: Int = 1): DataFrame = {
-    val cb = trainPqCodebooks(emb, dim, PqK, iters, sampleEvery)
-    pqSearch(pqEncodeWith(emb, dim, cb), emb, queryBound, dim, shortlist, cb)
-  }
-
-  /** DuckDB oracle for [[pqTopK]]: replays unit quantization, codebook
+  /** DuckDB oracle for [[pqTopKFromCodes]] over [[pqEncode]] codes: replays unit quantization, codebook
     * construction, nearest-codeword encoding, integer ADC scoring, the
     * shortlist cut, and the exact-cosine re-rank.
     */
@@ -1706,7 +1405,8 @@ object SimSearch {
        |  FROM p) WHERE rn <= $k""".stripMargin
   }
 
-  /** DuckDB oracle for [[q8TopK]]: replicates the quantization and the
+  /** DuckDB oracle for [[q8TopKFromCodes]] over [[quantizeCorpus]]
+    * codes: replicates the quantization and the
     * integer-exact scoring term for term.
     */
   def q8OracleSql(queryBound: Int): String =

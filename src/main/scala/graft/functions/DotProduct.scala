@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,16 +79,9 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  private val Name = "graft_dot"
-
-  /** Idempotently register graft_dot in the session's function registry
-    * and return a Column builder for it.
-    */
-  def fn(spark: SparkSession): (Column, Column) => Column = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(Name)))
-      reg.createOrReplaceTempFunction(Name,
-        (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)), "built-in")
-    (a, b) => org.apache.spark.sql.functions.call_function(Name, a, b)
+  /** `graft_dot(a, b)` as a Column. */
+  def col(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    column(DotProduct(expression(a), expression(b)))
   }
 }

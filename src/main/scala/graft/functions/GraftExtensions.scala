@@ -8,12 +8,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * expressions as SQL functions — the idiomatic deployment packaging:
   * `graft.GraftSession.create` installs it, and
   * `spark.sql.extensions=graft.functions.GraftExtensions` makes them
-  * available to plain SQL on any cluster, no code changes.
-  * (Library call sites register lazily through DotProduct.fn etc. as
-  * well, so DataFrame users need no extension config.)
+  * available to plain SQL on any cluster, no code changes. This is the
+  * ONLY place the SQL names are registered: DataFrame code builds its
+  * columns through `DotProduct.col` etc., which wrap the expression
+  * directly and never touch a session's function registry, so
+  * DataFrame users need no extension config.
   *
   * Registered: `graft_dot` (codegen'd float dot product),
-  * `graft_normalize` (text canonicalization), and the
+  * `graft_normalize` (text canonicalization), `graft_term_count`
+  * (occurrences of a term in a string array), and the
   * `graft_heavy_hitters(col, k)` Misra-Gries aggregate. The
   * config-parameterized expressions (SignBandKeys, MinhashSignature)
   * stay DataFrame-only by design: their plane/permutation constants

@@ -2,8 +2,7 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -106,14 +105,9 @@ object NormalizeText {
     !prevSpace // trailing space must fail
   }
 
-  private val Name = "graft_normalize"
-
-  /** Idempotently register graft_normalize and return a Column builder. */
-  def fn(spark: SparkSession): Column => Column = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(Name)))
-      reg.createOrReplaceTempFunction(Name,
-        (exprs: Seq[Expression]) => NormalizeText(exprs.head), "built-in")
-    c => org.apache.spark.sql.functions.call_function(Name, c)
+  /** `graft_normalize(c)` as a Column. */
+  def col(c: Column): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    column(NormalizeText(expression(c)))
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,14 +68,9 @@ case class TermCount(left: Expression, right: Expression)
 }
 
 object TermCount {
-  private val Name = "graft_term_count"
-
-  /** Idempotently register graft_term_count and return a Column builder. */
-  def fn(spark: SparkSession): (Column, Column) => Column = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(Name)))
-      reg.createOrReplaceTempFunction(Name,
-        (exprs: Seq[Expression]) => TermCount(exprs(0), exprs(1)), "built-in")
-    (a, t) => org.apache.spark.sql.functions.call_function(Name, a, t)
+  /** `graft_term_count(arr, term)` as a Column. */
+  def col(arr: Column, term: Column): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    column(TermCount(expression(arr), expression(term)))
   }
 }

@@ -739,14 +739,13 @@ object Analytics {
     * as a literal, embeddings never shuffle.
     */
   def embedScore(s: SparkSession, dir: String): DataFrame = {
-    val ndot = graft.functions.DotProduct.fn(s)
     val d = transform(col("embedding"), x => x.cast("double"))
     val sc = array_max(transform(d, x => abs(x))) / lit(127.0)
     val q = when(sc === 0.0, transform(d, _ => lit(0.0)))
       .otherwise(transform(d, x => floor(x / sc + lit(0.5))))
     val w = array((0 until 64).map(i => lit(((i * 37) % 21 - 10).toDouble)): _*)
     t(s, dir, "embeddings")
-      .select(col("vec_id"), ndot(q, w).cast("long").as("score"))
+      .select(col("vec_id"), graft.functions.DotProduct.col(q, w).cast("long").as("score"))
       .select(col("vec_id"), col("score"),
         when(col("score") > 0, "keep").otherwise("drop").as("label"))
   }

@@ -159,7 +159,7 @@ object NorthStar {
     * compiles to WindowGroupLimit partial/final pruning).
     */
   def simTopK5(s: SparkSession, dir: String): DataFrame =
-    graft.ext.SimSearch.bruteTopKN(t(s, dir, "embeddings"), 100, 5)
+    graft.ext.SimSearch.bruteTopKNFiltered(t(s, dir, "embeddings"), 100, 5)
 
   /** Filtered vector search: top-5 among label=1 candidates only (the
     * pre-filter serving shape — guarantees k ELIGIBLE neighbors where
@@ -286,7 +286,7 @@ object NorthStar {
     graft.ext.AnnEval.recallAtK(
       graft.ext.SimSearch.ivfTopKNFilteredWithCentroids(emb, EvalQueryBound,
         EvalK, lockedParams(s, dir).probes, trainedCents(s, dir), lit(true)),
-      graft.ext.SimSearch.bruteTopKN(emb, EvalQueryBound, EvalK))
+      graft.ext.SimSearch.bruteTopKNFiltered(emb, EvalQueryBound, EvalK))
   }
 
   /** [[annRecallQ]] for the FILTERED serving shape (label = 1 composed
@@ -1106,10 +1106,9 @@ object NorthStar {
     * casing is pinned by NormalizeTextSpec instead).
     */
   def textNormQ(s: SparkSession, dir: String): DataFrame = {
-    val norm = graft.functions.NormalizeText.fn(s)
+    val norm = graft.functions.NormalizeText.col(col("text"))
     t(s, dir, "documents").select(col("doc_id"),
-      norm(col("text")).as("norm_text"),
-      md5(norm(col("text")).cast("binary")).as("norm_hash"))
+      norm.as("norm_text"), md5(norm.cast("binary")).as("norm_hash"))
   }
 
   /** The embedding near-dup pair list, landed once per fixture dir and
@@ -2046,7 +2045,7 @@ object NorthStar {
     "srp_reduce" -> graft.ext.RandomProjection.reduceOracleSql(EmbDim, SrpDim),
     "sim_topk_srp" -> graft.ext.RandomProjection.topKOracleSql(
       EmbDim, SrpDim, 100),
-    "sim_topk5" -> graft.ext.SimSearch.bruteTopKNOracleSql(100, 5),
+    "sim_topk5" -> graft.ext.SimSearch.bruteTopKNFilteredOracleSql(100, 5),
     "mmr_rerank" -> graft.ext.MmrRerank.oracleSql(32, 20, 5),
     "mmr_rerank_filtered" ->
       graft.ext.MmrRerank.oracleSql(32, 20, 5, Some("c.label = 1")),

@@ -174,7 +174,7 @@ object ScaleOps {
       graft.ext.SimSearch.pqTopKNFilteredFromCodes(
         pqCodesWithMeta(s, dir), emb, 64, 10, 64, lit(true),
         shortlist = 20, codebook = pqCodebookLanded(s, dir)),
-      graft.ext.SimSearch.bruteTopKN(emb, 64, 10))
+      graft.ext.SimSearch.bruteTopKNFiltered(emb, 64, 10))
   }
 
   /** CDC merge over customer: a deterministic change feed (two stacked
@@ -964,7 +964,7 @@ object ScaleOps {
       graft.ext.SimSearch.pqFilteredOracleSql(100, 5, 64, "label = 1"),
     "ann_recall_pq" -> graft.ext.AnnEval.recallFromReplaysSql(
       graft.ext.SimSearch.pqFilteredOracleSql(64, 10, 64, "TRUE"),
-      graft.ext.SimSearch.bruteTopKNOracleSql(64, 10)),
+      graft.ext.SimSearch.bruteTopKNFilteredOracleSql(64, 10)),
     "cdc_merge" ->
       """WITH chg AS (
         |  SELECT c_custkey, c_name, c_nationkey, c_acctbal + 50 AS c_acctbal,

@@ -63,6 +63,38 @@ object AtomicPointer {
           catch { case _: Exception => () })
     } catch { case _: Exception => () } // best-effort, never fail a publish
 
+  /** Versioned-directory publish: `land` writes `dir/v=<version>` (it
+    * is handed that path), `_CURRENT` swaps to it, and retention then
+    * keeps the two newest versions so an in-flight reader of the
+    * previous version finishes its scan.
+    */
+  def publishVersion(conf: Configuration, dir: String, version: Long)(
+      land: String => Unit): Unit = {
+    land(s"$dir/v=$version")
+    write(conf, dir, s"v=$version")
+    keepNewest(conf, dir, 2)
+  }
+
+  /** The `v=<n>` version directories under `dir`, newest first; empty
+    * when `dir` does not exist. Names that do not parse are skipped.
+    */
+  def versions(conf: Configuration, dir: String): Seq[(Long, Path)] = {
+    val d = new Path(dir)
+    val fs = d.getFileSystem(conf)
+    if (!fs.exists(d)) Seq.empty
+    else fs.listStatus(d).toSeq.map(_.getPath).flatMap { p =>
+      val n = p.getName
+      if (n.startsWith("v=")) scala.util.Try(n.drop(2).toLong).toOption.map(_ -> p)
+      else None
+    }.sortBy(-_._1)
+  }
+
+  /** Delete all but the `n` newest versions under `dir`. */
+  def keepNewest(conf: Configuration, dir: String, n: Int): Unit = {
+    val fs = new Path(dir).getFileSystem(conf)
+    versions(conf, dir).drop(n).foreach { case (_, p) => fs.delete(p, true) }
+  }
+
   /** The current pointer value, or None if nothing has published yet. */
   def read(conf: Configuration, dir: String,
       name: String = PointerName): Option[String] = {

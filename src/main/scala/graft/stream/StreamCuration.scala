@@ -154,21 +154,10 @@ object StreamCuration {
     * in-flight reader of the previous version finishes its scan.
     */
   private[stream] def publishOutput(df: DataFrame, outDir: String,
-      version: Long): Unit = {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    df.write.mode("overwrite").parquet(s"$outDir/v=$version")
-    val dir = new Path(outDir)
-    graft.sink.AtomicPointer.write(conf, outDir, s"v=$version")
-    // Retention AFTER the swap: drop all but the two newest versions.
-    val fs = dir.getFileSystem(conf)
-    val vs = fs.listStatus(dir).map(_.getPath).flatMap { p =>
-      val n = p.getName
-      if (n.startsWith("v=")) scala.util.Try(n.drop(2).toLong).toOption.map(_ -> p)
-      else None
-    }.sortBy(-_._1)
-    vs.drop(2).foreach { case (_, p) => fs.delete(p, true) }
-  }
+      version: Long): Unit =
+    graft.sink.AtomicPointer.publishVersion(
+      df.sparkSession.sparkContext.hadoopConfiguration, outDir, version)(
+      df.write.mode("overwrite").parquet(_))
 
   /** Read the currently-published output: follow the `_CURRENT`
     * pointer (atomic with the publish — never a partial directory).
@@ -238,16 +227,9 @@ object StreamCuration {
     * possibly-partial v=N.
     */
   private def latestVersion(spark: SparkSession, dir: String,
-      below: Long): Option[Long] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .flatMap(n => scala.util.Try(n.drop(2).toLong).toOption)
-      .filter(_ < below)
-      .maxOption
-  }
+      below: Long): Option[Long] =
+    graft.sink.AtomicPointer.versions(spark.sparkContext.hadoopConfiguration, dir)
+      .map(_._1).find(_ < below)
 
   private def dirExists(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
@@ -473,13 +455,9 @@ object StreamCuration {
     prevV.foreach { pv =>
       val conf = spark.sparkContext.hadoopConfiguration
       Seq("index", "counts").foreach { sub =>
-        val d = new Path(s"$stateDir/$sub")
-        val fs = d.getFileSystem(conf)
-        if (fs.exists(d)) fs.listStatus(d).map(_.getPath).foreach { p =>
-          scala.util.Try(p.getName.drop(2).toLong).toOption
-            .filter(v => p.getName.startsWith("v=") && v < pv)
-            .foreach(_ => fs.delete(p, true))
-        }
+        graft.sink.AtomicPointer.versions(conf, s"$stateDir/$sub")
+          .collect { case (v, p) if v < pv => p }
+          .foreach(p => p.getFileSystem(conf).delete(p, true))
       }
     }
     joined.unpersist(); newWinners.unpersist()

@@ -1,6 +1,6 @@
 package graft.transform
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -83,6 +83,17 @@ object CurationCompiler {
       .filter(col("__ntok") >= cu.minTokens && col("__ntok") <= cu.maxTokens &&
         col("__nstop") / col("__ntok") >= cu.minStopRatio && col("__barrier") >= 0)
       .select(col(cu.idField), text, col(cu.stratumField))
+  }
+
+  /** [[gate]]'s quality test as one predicate column, for sections that
+    * need "quality" as a condition rather than a filter (the dsir
+    * target and the lm_buckets reference default to it).
+    */
+  private def qualityPredicate(cu: CurationConfig): Column = {
+    val nTok = TextAnalysis.qualityTokenCount(col(cu.textField)).cast("long")
+    nTok >= cu.minTokens && nTok <= cu.maxTokens &&
+      TextAnalysis.qualityStopwordCount(col(cu.textField)).cast("double") /
+        nTok >= cu.minStopRatio
   }
 
   /** Context-window chunks of `docs` with the composite (doc, chunk)
@@ -253,14 +264,7 @@ object CurationCompiler {
     */
   def compileDsir(ds: graft.config.DsirConfig, cu: CurationConfig)(
       docs: DataFrame): DataFrame = {
-    val isTarget = ds.targetWhere match {
-      case Some(p) => expr(p)
-      case None =>
-        val nTok = TextAnalysis.qualityTokenCount(col(cu.textField)).cast("long")
-        nTok >= cu.minTokens && nTok <= cu.maxTokens &&
-          TextAnalysis.qualityStopwordCount(col(cu.textField)).cast("double") /
-            nTok >= cu.minStopRatio
-    }
+    val isTarget = ds.targetWhere.map(expr).getOrElse(qualityPredicate(cu))
     graft.ext.Dsir.sample(docs, cu.idField, cu.textField, isTarget, ds.keepNum)
   }
 
@@ -283,14 +287,7 @@ object CurationCompiler {
     */
   def compileLmBuckets(lb: graft.config.LmBucketsConfig, cu: CurationConfig)(
       docs: DataFrame): DataFrame = {
-    val isRef = lb.refWhere match {
-      case Some(p) => expr(p)
-      case None =>
-        val nTok = TextAnalysis.qualityTokenCount(col(cu.textField)).cast("long")
-        nTok >= cu.minTokens && nTok <= cu.maxTokens &&
-          TextAnalysis.qualityStopwordCount(col(cu.textField)).cast("double") /
-            nTok >= cu.minStopRatio
-    }
+    val isRef = lb.refWhere.map(expr).getOrElse(qualityPredicate(cu))
     graft.ext.LmBuckets.buckets(docs, cu.idField, cu.textField,
       lb.langField, isRef)
   }

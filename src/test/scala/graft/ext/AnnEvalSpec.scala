@@ -43,7 +43,7 @@ class AnnEvalSpec extends SparkTestBase {
   }
 
   test("identity lane: grading ground truth against itself is perfect") {
-    val gt = SimSearch.bruteTopKN(emb, 16, 5)
+    val gt = SimSearch.bruteTopKNFiltered(emb, 16, 5)
     val out = AnnEval.recallAtK(gt, gt).collect()
     assert(out.length === 16)
     out.foreach { r =>
@@ -66,7 +66,7 @@ class AnnEvalSpec extends SparkTestBase {
     // of the same index at the same probe count.
     val single = AnnEval.recallAtK(
       SimSearch.ivfTopKNFilteredWithCentroids(emb, 32, 5, 10, cents, lit(true)),
-      SimSearch.bruteTopKN(emb, 32, 5))
+      SimSearch.bruteTopKNFiltered(emb, 32, 5))
       .agg(sum("hits")).collect().head.getLong(0)
     assert(hits.last === single)
   }
@@ -116,7 +116,7 @@ class AnnEvalSpec extends SparkTestBase {
       graft.transform.CurationCompiler.compileSimilarity(
         si.copy(evalRecall = false))(emb, cents,
         sys.error("pq codes must not be built at this corpus size")),
-      SimSearch.bruteTopKN(emb, 16, 5))
+      SimSearch.bruteTopKNFiltered(emb, 16, 5))
     assert(graded.collect().map(_.toSeq).toSet ===
       direct.collect().map(_.toSeq).toSet)
     // Default (no eval) keeps the (qid, cid, sim, rank) serving schema.
@@ -266,7 +266,7 @@ class AnnEvalSpec extends SparkTestBase {
     // top-1 recall against exact brute ground truth (the SimSearchSpec
     // stride-4 bar, re-checked on the act's own output).
     val served = IvfIndex.topKOverCells(emb, gotCells, gotCents, 100, 1, 10)
-    val gt = SimSearch.bruteTopKN(emb, 100, 1)
+    val gt = SimSearch.bruteTopKNFiltered(emb, 100, 1)
     val hits = graft.ext.AnnEval.recallAtK(served, gt)
       .agg(sum("hits")).head.getLong(0)
     assert(hits >= 80, s"sampled-retrained serving top-1 recall $hits/100 < 80" +
@@ -377,7 +377,7 @@ class AnnEvalSpec extends SparkTestBase {
     // against exact brute ground truth.
     val p = SimSearch.IvfParams.forCorpus(60000L).probes
     val served = IvfIndex.topKOverCells(big, gotCells, gotCents, 100, 1, p)
-    val gt = SimSearch.bruteTopKN(big, 100, 1)
+    val gt = SimSearch.bruteTopKNFiltered(big, 100, 1)
     val hits = graft.ext.AnnEval.recallAtK(served, gt)
       .agg(sum("hits")).head.getLong(0)
     assert(hits >= 80, s"stride-2 config-act serving recall $hits/100 < 80")

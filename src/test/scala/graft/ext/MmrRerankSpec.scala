@@ -28,7 +28,7 @@ class MmrRerankSpec extends SparkTestBase {
   test("rank 1 equals the plain relevance argmax; scores carry penalties") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val out = MmrRerank.rerank(emb, 8, 10, 3).cache()
-    val top1 = SimSearch.bruteTopKN(emb, 8, 1)
+    val top1 = SimSearch.bruteTopKNFiltered(emb, 8, 1)
       .select("qid", "cid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     out.filter(col("rank") === 1).collect().foreach { r =>
       assert(top1(r.getAs[Long]("qid")) === r.getAs[Long]("cid"))

@@ -16,10 +16,9 @@ class SimSearchSpec extends SparkTestBase {
   test("codegen graft_dot is bit-identical to the declarative fold") {
     import org.apache.spark.sql.functions.col
     val emb = t(spark, sf0001, "embeddings")
-    val ndot = graft.functions.DotProduct.fn(spark)
     val diff = emb.select(
         SimSearch.dot(col("embedding"), col("embedding")).as("a"),
-        ndot(col("embedding"), col("embedding")).as("b"))
+        graft.functions.DotProduct.col(col("embedding"), col("embedding")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0, "codegen dot must match the fold exactly, not approximately")
   }
@@ -67,13 +66,13 @@ class SimSearchSpec extends SparkTestBase {
     assert(agree >= 80, s"ivf top-1 agreement $agree/100 below bound")
   }
 
-  test("trained IVF centroids recover cluster structure that first-K centroids miss") {
+  test("locked trained IVF recovers clusters too, and is deterministic") {
     import org.apache.spark.sql.functions._
     // Deterministic clustered corpus: 8 orthogonal cluster centers
     // (one-hot dims), vectors = center + hash-derived noise. Cluster
     // id = vec_id div 125, so the FIRST 8 vectors — the first-K
     // centroids — all sit in cluster 0: that quantizer's cells are
-    // noise-slices of one cluster. k-means recovers the real centers.
+    // noise-slices of one cluster. The locked Lloyd unroll must escape it.
     val dim = 16
     val df = spark.range(1000).select(
       col("id").as("vec_id"),
@@ -89,37 +88,11 @@ class SimSearchSpec extends SparkTestBase {
     val p = SimSearch.IvfParams(8, 1)
     val firstK = agree(SimSearch.ivfTopK(df, 100, p).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val trained = agree(SimSearch.ivfTopKTrained(df, 100, p).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    info(s"probe-1 top-1 agreement: firstK=$firstK/100 trained=$trained/100")
-    assert(trained >= 85, s"trained centroids must recover the clusters: $trained/100")
-    assert(trained >= firstK + 20,
-      s"training must beat insertion-order centroids: trained=$trained firstK=$firstK")
-  }
-
-  test("locked trained IVF recovers clusters too, and is deterministic") {
-    import org.apache.spark.sql.functions._
-    // Same clustered corpus as the k-means test: first-K centroids all
-    // land in cluster 0, the locked Lloyd unroll must escape it.
-    val dim = 16
-    val df = spark.range(1000).select(
-      col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        (when(j === (col("id") / 125).cast("int"), 1.0).otherwise(0.0) +
-          (pmod(xxhash64(col("id") * dim + j.cast("long")), lit(1000L))
-            .cast("double") / 1000.0 - 0.5) * 0.2)
-          .cast("float")).as("embedding"))
-    val brute = SimSearch.bruteTopK(df, 100).collect()
+    def lockedRun() = SimSearch.ivfTopKWithCentroids(df, 100, p.probes,
+        SimSearch.trainCentroidsLocked(df, p.numCentroids, iters = 2)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def agree(res: Map[Long, Long]): Int =
-      brute.count { case (q, c) => res.get(q).contains(c) }
-    val p = SimSearch.IvfParams(8, 1)
-    val firstK = agree(SimSearch.ivfTopK(df, 100, p).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val run1 = SimSearch.ivfTopKTrainedLocked(df, 100, p, iters = 2).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val run2 = SimSearch.ivfTopKTrainedLocked(df, 100, p, iters = 2).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val run1 = lockedRun()
+    val run2 = lockedRun()
     assert(run1 == run2, "locked training must be bit-deterministic")
     val locked = agree(run1)
     info(s"probe-1 top-1 agreement: firstK=$firstK/100 locked=$locked/100")
@@ -204,21 +177,12 @@ class SimSearchSpec extends SparkTestBase {
     val df = Seq(
       (0L, Array(0f, 0f, 0f, 0f)),
       (1L, Array(1f, 0f, -1f, 0f))).toDF("vec_id", "embedding")
-    val ndot = graft.functions.DotProduct.fn(spark)
     val out = df.select(col("vec_id"),
-      SimSearch.quantizeUnit(col("embedding"), ndot).as("u"))
+      SimSearch.quantizeUnit(col("embedding")).as("u"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(out(0L) == Seq(0.0, 0.0, 0.0, 0.0), s"zero vector: ${out(0L)}")
     assert(!out(1L).exists(_.isNaN))
     assert(out(1L).head == 90.0) // 127/sqrt(2) rounds to 90
-  }
-
-  test("ivfTopKTrained is deterministic across runs") {
-    val emb = t(spark, sf0001, "embeddings")
-    val p = SimSearch.IvfParams(16, 4)
-    val a = SimSearch.ivfTopKTrained(emb, 50, p, iters = 2).collect().map(_.toSeq).toSet
-    val b = SimSearch.ivfTopKTrained(emb, 50, p, iters = 2).collect().map(_.toSeq).toSet
-    assert(a == b && a.map(_.head).size == 50)
   }
 
   test("lshTopK top-1 agrees with brute force on >= 90% of queries") {
@@ -233,8 +197,10 @@ class SimSearchSpec extends SparkTestBase {
 
   test("q8TopK is deterministic and mostly agrees with the float path") {
     val emb = t(spark, sf0001, "embeddings")
-    val a = SimSearch.q8TopK(emb, 100).collect().map(_.toSeq)
-    val b = SimSearch.q8TopK(emb, 100).collect().map(_.toSeq)
+    def q8Run() = SimSearch.q8TopKFromCodes(SimSearch.quantizeCorpus(emb), 100)
+      .collect().map(_.toSeq)
+    val a = q8Run()
+    val b = q8Run()
     assert(a.toSet == b.toSet && a.length == 100)
     val brute = SimSearch.bruteTopK(emb, 100).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -264,54 +230,11 @@ class SimSearchSpec extends SparkTestBase {
       s"codebook self-encoding violated: ${self.filterNot(c => c._3 == c._1).take(5).toSeq}")
   }
 
-  test("trained PQ codebooks beat any insertion-order codebook (raw ADC)") {
-    import org.apache.spark.sql.functions._
-    // Clustered corpus with INTERLEAVED cluster ids (id % 8) — with
-    // block-contiguous clusters the first-256 codebook contains every
-    // subvector of the query cluster and self-codes exactly the
-    // candidates that matter (measured 86/100, an artifact, not
-    // quantizer quality; random-256 actual subvectors measure 44 on
-    // the same corpus). Interleaving removes the concentration so both
-    // untrained codebooks tie (37 vs 36) and Lloyd iterations measure
-    // their real effect: 37 → 45 raw-ADC top-1 (+9 over the iters=0
-    // init, deterministic).
-    val dim = 64
-    val df = spark.range(1000).select(
-      col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        (when(j === pmod(col("id"), lit(8)).cast("int") * 8, 1.0).otherwise(0.0) +
-          (pmod(xxhash64(col("id") * dim + j.cast("long")), lit(1000L))
-            .cast("double") / 1000.0 - 0.5) * 0.2)
-          .cast("float")).as("embedding"))
-    val brute = SimSearch.bruteTopK(df, 100).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def agree(res: Array[org.apache.spark.sql.Row]): Int = {
-      val m = res.map(r => r.getLong(0) -> r.getLong(1)).toMap
-      brute.count { case (q, c) => m.get(q).contains(c) }
-    }
-    // shortlist=1 ⇒ the re-rank is the identity on the ADC winner:
-    // this measures the QUANTIZER, not the re-rank's repair.
-    val firstK = agree(SimSearch.pqTopK(df, 100, dim, shortlist = 1).collect())
-    val trained = agree(
-      SimSearch.pqTopKTrained(df, 100, dim, shortlist = 1).collect())
-    info(s"raw ADC top-1 agreement: firstK=$firstK/100 trained=$trained/100")
-    assert(trained >= firstK + 5,
-      s"training must beat insertion order: trained=$trained firstK=$firstK")
-    assert(trained >= 42, s"trained codebooks must recover structure: $trained/100")
-  }
-
-  test("pqTopKTrained is deterministic across runs") {
-    val emb = t(spark, sf0001, "embeddings")
-    val a = SimSearch.pqTopKTrained(emb, 50, 64, iters = 2).collect().map(_.toSeq).toSet
-    val b = SimSearch.pqTopKTrained(emb, 50, 64, iters = 2).collect().map(_.toSeq).toSet
-    assert(a == b && a.map(_.head).size == 50)
-  }
-
   test("pqTopK top-1 agrees with brute force on >= 95% of queries") {
     val emb = t(spark, sf0001, "embeddings")
     val brute = SimSearch.bruteTopK(emb, 100).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val pq = SimSearch.pqTopK(emb, 100, 64).collect()
+    val pq = SimSearch.pqTopKFromCodes(SimSearch.pqEncode(emb, 64), emb, 100, 64).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pq.size == 100)
     val agree = brute.count { case (q, c) => pq.get(q).contains(c) }

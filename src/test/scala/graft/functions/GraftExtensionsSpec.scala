@@ -4,9 +4,9 @@ import graft.SparkTestBase
 
 /** The SQL deployment surface: a session built by `GraftSession.create`
   * carries GraftExtensions, so plain `spark.sql` sees the custom
-  * expressions, matching their DataFrame twins. `graft_heavy_hitters`
-  * has no lazy registration path, so its SQL lane alone proves the
-  * extension is installed.
+  * expressions, matching their DataFrame twins. No DataFrame code path
+  * registers a function (`FunctionRegistryGuardSpec`), so every SQL lane
+  * here proves the extension is installed.
   */
 class GraftExtensionsSpec extends SparkTestBase {
 

@@ -59,9 +59,8 @@ class NormalizeTextSpec extends SparkTestBase {
   }
 
   test("codegen path equals the shared core, nulls propagate") {
-    val f = NormalizeText.fn(spark)
     val inputs = Seq("cafe\u0301\u00a0\u00a0RIVER", "plain ascii", "\u00c9COLE x", null)
-    val viaDf = inputs.toDF("s").select(f(col("s")).as("n"))
+    val viaDf = inputs.toDF("s").select(NormalizeText.col(col("s")).as("n"))
       .collect().map(r => Option(r.getString(0)))
     val expected = inputs.map(s => Option(s).map(norm))
     assert(viaDf.toSeq == expected)

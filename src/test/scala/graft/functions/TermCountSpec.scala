@@ -11,11 +11,10 @@ class TermCountSpec extends SparkTestBase {
 
   test("equals size(filter(arr, == t)) on the corpus, nulls handled") {
     val s = spark; import s.implicits._
-    val tc = TermCount.fn(spark)
     val docs = graft.Tables.t(spark, sf0001, "documents")
       .select(split(trim(col("text")), "\\s+").as("tk"))
     val diff = docs.select(
-        tc(col("tk"), lit("hash")).as("fast"),
+        TermCount.col(col("tk"), lit("hash")).as("fast"),
         size(filter(col("tk"), x => x === "hash")).as("slow"))
       .filter(col("fast") =!= col("slow")).count()
     assert(diff == 0L)
@@ -24,7 +23,7 @@ class TermCountSpec extends SparkTestBase {
       (Some(Seq(Some("a"), None, Some("a"))), "a"),
       (None: Option[Seq[Option[String]]], "a"))
       .toDF("tk", "t")
-      .select(tc(col("tk"), col("t")).as("c")).collect()
+      .select(TermCount.col(col("tk"), col("t")).as("c")).collect()
     assert(edge(0).getInt(0) == 2)
     assert(edge(1).isNullAt(0))
   }
@@ -32,9 +31,8 @@ class TermCountSpec extends SparkTestBase {
   test("participates in whole-stage codegen") {
     // A parquet-backed scan — a local relation would be constant-folded
     // before any codegen stage exists.
-    val tc = TermCount.fn(spark)
     val q = graft.Tables.t(spark, sf0001, "documents")
-      .select(tc(split(trim(col("text")), "\\s+"), lit("a")).as("c"))
+      .select(TermCount.col(split(trim(col("text")), "\\s+"), lit("a")).as("c"))
     // The `*(n)` prefix marks a whole-stage-codegen'd operator.
     val plan = q.queryExecution.executedPlan.toString
     assert("""\*\(\d+\) Project \[graft_term_count""".r.findFirstIn(plan).isDefined, plan)

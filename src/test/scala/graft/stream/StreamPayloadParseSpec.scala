@@ -15,11 +15,7 @@ import graft.SparkTestBase
   * is this logic, now exercised (not just plan-built) in-sandbox.
   */
 class StreamPayloadParseSpec extends SparkTestBase {
-
-  /** A Kafka-record-shaped row: binary payload under the transport's
-    * column name.
-    */
-  private case class Rec(value: Array[Byte])
+  import StreamPayloadParseSpec.Rec
 
   private val schema = StructType(Seq(
     StructField("event_id", LongType),
@@ -64,4 +60,13 @@ class StreamPayloadParseSpec extends SparkTestBase {
     assert(rows.contains((null, "missing fields", null)))
     assert(rows.size == 4, "every payload must produce exactly one row")
   }
+}
+
+object StreamPayloadParseSpec {
+  /** A Kafka-record-shaped row: binary payload under the transport's
+    * column name. Top-level in the companion, not nested in the spec
+    * class: Spark's generated encoder code cannot construct an inner
+    * class without its outer instance.
+    */
+  final case class Rec(value: Array[Byte])
 }

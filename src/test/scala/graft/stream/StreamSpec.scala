@@ -68,7 +68,6 @@ class StreamSpec extends SparkTestBase {
   }
 
   test("graft_dot is SQL-callable once registered in a session") {
-    graft.functions.DotProduct.fn(spark) // idempotent registration
     val v = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .head().getDouble(0)
     assert(v == 11.0)
