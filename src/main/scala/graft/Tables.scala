@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Fixture-table loader. All engine queries read the driver-generated
-  * parquet tables (TESTDATA.md) through this single entry point so the
-  * scan path (predicate pushdown, column pruning) is uniform.
+/** Fixture-table loader and landing owner. All engine queries read the
+  * driver-generated parquet tables (TESTDATA.md) through [[t]], so the
+  * scan path (predicate pushdown, column pruning) is uniform, and land
+  * their build-once artifacts through [[land]].
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -20,28 +21,59 @@ object Tables {
     */
   def pathTag(dir: String): String = "sf_" + dir.replaceAll("[^A-Za-z0-9]", "_")
 
-  private val landed =
+  private val builds =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[Unit]]()
 
-  /** Build-once guard for landed scratch artifacts (PQ/q8 codes,
-    * trained centroids, partitioned layouts): the first caller per
-    * JVM runs `build` (which must WRITE `path`), everyone else just
-    * reads. Single-flight: a caller racing the first one blocks until
-    * the build is done, so no caller returns while `path` is
-    * mid-write. The build runs outside the map's `computeIfAbsent`,
-    * because builds nest (a landing may land another path). A failed
-    * build throws to every caller waiting on it and removes its own
-    * entry, so a later call retries instead of reading a
-    * missing/partial artifact for the rest of the JVM.
+  /** Lands the build-once artifact `name` derived from the fixture in
+    * `dir` and returns its path, `/tmp/graft_<name>/<pathTag(dir)>`.
+    * Every landed artifact in the engine comes from here: trained
+    * centroids, PQ/q8 codes, rollups, clustered, partitioned and
+    * bucketed layouts, scratch files for the reader paths, and the
+    * demo tables published once per fixture. A query that lands does
+    * so because the operator under measurement is what reads the
+    * artifact (serving, pruned scan, co-located join, rewrite);
+    * rebuilding an identical artifact from the same fixture on every
+    * run would only re-time the one-off build. A deployment builds its
+    * indexes and layouts once and serves from them.
+    *
+    * `build(path)` writes the artifact at or under `path` (a landing
+    * that publishes catalog tables keys only its build on it). It runs
+    * once per JVM: a caller racing the first one blocks until the build
+    * is done, so no caller returns while `path` is mid-write; a failed
+    * build throws to every caller waiting on it and is retried by the
+    * next call, never left half-landed for the rest of the JVM. Builds
+    * may land other artifacts. Nothing survives into the next JVM: its
+    * first call rebuilds, overwriting what an earlier process left.
     */
-  def landOnce(path: String)(build: => Unit): Unit = {
-    val entry = landed.computeIfAbsent(path,
+  def land(name: String, dir: String)(build: String => Unit): String = {
+    val path = s"/tmp/graft_$name/${pathTag(dir)}"
+    landOnce(path)(build(path))
+    path
+  }
+
+  /** [[land]]s `frame` as parquet and returns the cached read of it. */
+  def landed(spark: SparkSession, name: String, dir: String)(frame: => DataFrame): DataFrame =
+    landedWith(spark, name, dir)(frame.write.mode("overwrite").parquet(_))
+
+  /** [[land]]s through a parquet writer of the caller's (partitioned,
+    * clustered, appended) and returns the cached read of the landing.
+    */
+  def landedWith(spark: SparkSession, name: String, dir: String)(
+      build: String => Unit): DataFrame =
+    readImmutable(spark, land(name, dir)(build))
+
+  /** Single-flight build guard behind [[land]]. The build runs outside
+    * the map's `computeIfAbsent`, because builds nest; a failed build
+    * removes its own entry so the next call retries.
+    */
+  private def landOnce(path: String)(build: => Unit): Unit = {
+    val entry = builds.computeIfAbsent(path,
       _ => new java.util.concurrent.FutureTask[Unit](() => build))
     entry.run() // a no-op unless this caller is the first to force it
     try entry.get()
     catch {
       case e: java.util.concurrent.ExecutionException =>
-        landed.remove(path, entry)
+        builds.remove(path, entry)
         throw e.getCause
     }
   }
@@ -53,29 +85,23 @@ object Tables {
     * "Session-overhead floor", and VERDICT.md; across the 252-query ×
     * 3-rep bench that re-resolution was a double-digit share of total
     * wall time). A production deployment resolves a table once through
-    * its catalog; this map is that, for path tables. Only IMMUTABLE-per-JVM paths may go through it: the
-    * driver fixture tables and the [[landOnce]]-guarded scratch
-    * artifacts (built exactly once per JVM, then read-only) — paths
-    * that are VERSIONED or rewritten in place (published index dirs,
-    * streaming sinks) must keep calling spark.read directly. Caching
-    * is per SparkSession (a DataFrame is bound to its session and its
+    * its catalog; this map is that, for path tables. Only paths that
+    * are immutable for the JVM's life can reach it, and only two kinds:
+    * fixture tables through [[t]] and finished landings through
+    * [[landedWith]]. A fixture path ends in `.parquet`; a landing path
+    * ends in a [[pathTag]], which has no dot, so the two never share a
+    * key. Versioned or rewritten-in-place paths (published index dirs,
+    * streaming sinks) are read with spark.read directly. Caching is
+    * per SparkSession (a DataFrame is bound to its session and its
     * conf — e.g. the AQE-off plan-guard session must not share plans
     * with the main one), and it caches RESOLUTION ONLY: every query
     * still builds its own plan on top and re-executes every job.
-    *
-    * The key's flag separates the two readers of one path:
-    * [[readImmutable]] caches the raw read, [[t]] the fixture frame
-    * with `events.ts` normalized. Sharing a key would let whichever
-    * ran first decide what the other returns.
     */
   private val resolvedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Boolean), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  /** Cached read of an immutable-per-JVM parquet path (see
-    * [[resolvedCache]] for the contract).
-    */
-  def readImmutable(spark: SparkSession, path: String): DataFrame =
-    resolvedCache.computeIfAbsent((spark, path, false), _ => spark.read.parquet(path))
+  private def readImmutable(spark: SparkSession, path: String): DataFrame =
+    resolvedCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark's vectorized
@@ -85,7 +111,7 @@ object Tables {
     // build time; this set-once guard covers foreign sessions (e.g. the
     // harness smoke session) without re-mutating conf on every read.
     if (spark.conf.get(NanosKey, "false") != "true") spark.conf.set(NanosKey, "true")
-    resolvedCache.computeIfAbsent((spark, s"$dir/$name.parquet", true), _ => {
+    resolvedCache.computeIfAbsent((spark, s"$dir/$name.parquet"), _ => {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events" &&
           df.schema("ts").dataType == org.apache.spark.sql.types.LongType)

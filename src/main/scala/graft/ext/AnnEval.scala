@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.DotProduct.{col => ndot}
-
 /** ANN serving-quality EVALUATION — the measurement half of the
   * similarity-search surface. Every approximate index in this engine
   * (IVF, trained IVF, PQ, SRP, LSH) trades recall for probe cost;
@@ -72,14 +70,8 @@ object AnnEval {
       s"probe levels must be ascending positives: $levels")
     val spark = emb.sparkSession
     import spark.implicits._
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-      sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
-    val csim = round(ndot(col("v"), col("cv")) / (col("n") * col("cn")), 6)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("csim").desc, col("cent_id").asc)
-    val ranked = vecs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cent_id"), csim.as("csim"))
-      .withColumn("crn", row_number().over(w))
+    val vecs = SimSearch.normed(emb, "vec_id", "v", "n")
+    val ranked = SimSearch.centroidRanks(vecs, cents)
     val cells = ranked.filter(col("crn") === 1)
       .select(col("vec_id").as("cid"), col("cent_id").as("cell"))
     val qprobe = ranked
@@ -97,7 +89,7 @@ object AnnEval {
       .join(vecs.select(col("vec_id").as("cid"),
         col("v").as("cv"), col("n").as("cn")), "cid")
       .select(col("qid"), col("cid"), col("mincrn"),
-        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
+        SimSearch.cos6("qv", "cv", "qn", "cn").as("sim"))
     val lv = levels.map(_.toLong).toDF("probes")
     val wr = Window.partitionBy(col("probes"), col("qid"))
       .orderBy(col("sim").desc, col("cid").asc)

@@ -1,10 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.DotProduct.{col => ndot}
 
 /** Landed-IVF index MAINTENANCE: build the cell table for a base
   * corpus, then UPSERT later-arriving vectors by assigning them to the
@@ -52,15 +49,9 @@ object IvfIndex {
     */
   def topKOverCells(emb: DataFrame, cells: DataFrame, cents: DataFrame,
       queryBound: Int, k: Int, probes: Int): DataFrame = {
-    val vecs = emb.select(col("vec_id"), col("embedding").as("v"),
-      sqrt(ndot(col("embedding"), col("embedding"))).as("n"))
+    val vecs = SimSearch.normed(emb, "vec_id", "v", "n")
     val queries = vecs.filter(col("vec_id") < queryBound)
-    val csim = round(ndot(col("v"), col("cv")) / (col("n") * col("cn")), 6)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("csim").desc, col("cent_id").asc)
-    val probed = queries.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cent_id"), csim.as("csim"))
-      .withColumn("crn", row_number().over(w))
+    val probed = SimSearch.centroidRanks(queries, cents)
       .filter(col("crn") <= probes)
       .select(col("vec_id").as("qid"), col("cent_id").as("cell"))
     // Multi-probe duplicates collapse BEFORE the exact re-rank (a
@@ -69,16 +60,12 @@ object IvfIndex {
       .join(cells.select(col("vec_id").as("cid"), col("cell")), "cell")
       .filter(col("qid") =!= col("cid"))
       .select("qid", "cid").distinct()
-    val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    cand
+    SimSearch.topKPerQuery(cand
       .join(broadcast(queries.select(col("vec_id").as("qid"),
         col("v").as("qv"), col("n").as("qn"))), "qid")
       .join(vecs.select(col("vec_id").as("cid"),
         col("v").as("cv"), col("n").as("cn")), "cid")
-      .select(col("qid"), col("cid"),
-        round(ndot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+      .select(col("qid"), col("cid"), SimSearch.cos6("qv", "cv", "qn", "cn").as("sim")), k)
   }
 
   /** Per-cell population of a (possibly upserted) cell table, split by

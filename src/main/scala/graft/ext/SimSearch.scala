@@ -166,21 +166,21 @@ object SimSearch {
     * below divides by norms computed once per vector, before any pair
     * join (identical floats, a third of the per-pair fold work).
     */
-  private def normed(emb: DataFrame, id: String, v: String, n: String): DataFrame =
+  private[ext] def normed(emb: DataFrame, id: String, v: String, n: String): DataFrame =
     emb.select(if (id == "vec_id") col(id) else col("vec_id").as(id),
       col("embedding").as(v), sqrt(ndot(col("embedding"), col("embedding"))).as(n))
 
   /** Cosine of vector columns `a`, `b` from their norms `na`, `nb`,
     * rounded to 6 dp so rankings are robust to cross-engine summation.
     */
-  private def cos6(a: String, b: String, na: String, nb: String): Column =
+  private[ext] def cos6(a: String, b: String, na: String, nb: String): Column =
     round(ndot(col(a), col(b)) / (col(na) * col(nb)), 6)
 
   /** The per-query total order of every ranked result: sim DESC, cid ASC. */
   private val ByQuery = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
 
   /** Top-`k` (qid, cid, sim) rows per query, ranked 1..k in `rank`. */
-  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+  private[ext] def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
     scored.withColumn("rank", row_number().over(ByQuery)).filter(col("rank") <= k)
 
   /** The best (qid, cid, sim) row per query. */
@@ -332,7 +332,7 @@ object SimSearch {
     * never shuffles for assignment (window over K ranked rows per
     * vector after a broadcast cross join).
     */
-  private def centroidRanks(vecs: DataFrame, cents: DataFrame): DataFrame = {
+  private[ext] def centroidRanks(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cent_id").asc)
     vecs.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cent_id"), cos6("v", "cv", "n", "cn").as("csim"))

@@ -38,10 +38,8 @@ object Broker {
     * broker partition.
     */
   def brokerRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tag = graft.Tables.pathTag(dir)
-    val base = s"/tmp/graft_broker/$tag"
-    val brokerDir = s"$base/log"
-    graft.Tables.landOnce(s"broker_$tag") {
+    val base = graft.Tables.land("broker", dir) { base =>
+      val brokerDir = s"$base/log"
       // The broker log is APPEND-ONLY and the landing checkpoint
       // resumes — unlike every overwrite-mode landing, a second JVM
       // would double the log and the landed table (seen: 399 vs 199

@@ -208,15 +208,11 @@ object NorthStar {
     graft.ext.SimSearch.IvfParams.forCorpus(
       t(s, dir, "embeddings").count())
 
-  private[queries] def trainedCents(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_cents/${graft.Tables.pathTag(dir)}"
-    graft.Tables.landOnce(path) {
+  private[queries] def trainedCents(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.landed(s, "cents", dir) {
       graft.ext.SimSearch.trainCentroidsLocked(t(s, dir, "embeddings"),
         lockedParams(s, dir).numCentroids, LockedIters)
-        .write.mode("overwrite").parquet(path)
     }
-    graft.Tables.readImmutable(s, path)
-  }
 
   /** Trained-IVF ANN with the parameter-LOCKED Lloyd unroll (2
     * iterations over quantized integer vectors, sum-vector centroids)
@@ -232,15 +228,11 @@ object NorthStar {
     */
   private val TrainSampleEvery = 4
 
-  private[queries] def sampledCents(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_cents_sampled/${graft.Tables.pathTag(dir)}"
-    graft.Tables.landOnce(path) {
+  private[queries] def sampledCents(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.landed(s, "cents_sampled", dir) {
       graft.ext.SimSearch.trainCentroidsLockedSampled(t(s, dir, "embeddings"),
         lockedParams(s, dir).numCentroids, LockedIters, TrainSampleEvery)
-        .write.mode("overwrite").parquet(path)
     }
-    graft.Tables.readImmutable(s, path)
-  }
 
   /** Trained-IVF ANN whose centroids trained on a deterministic 1/4
     * residue sample of the corpus ([[graft.ext.SimSearch.trainCentroidsLockedSampled]])
@@ -325,24 +317,19 @@ object NorthStar {
     val emb = t(s, dir, "embeddings")
     val cutoff = 4L * emb.count() / 5
     val p = graft.ext.SimSearch.IvfParams.forCorpus(cutoff)
-    val tag = graft.Tables.pathTag(dir)
-    val centsPath = s"/tmp/graft_upsert_cents/$tag"
-    graft.Tables.landOnce(centsPath) {
+    val cents = graft.Tables.landed(s, "upsert_cents", dir) {
       graft.ext.SimSearch.trainCentroidsLocked(
         emb.filter(col("vec_id") < cutoff), p.numCentroids, LockedIters)
-        .write.mode("overwrite").parquet(centsPath)
     }
-    val cents = graft.Tables.readImmutable(s, centsPath)
-    val cellsPath = s"/tmp/graft_upsert_cells/$tag"
-    graft.Tables.landOnce(cellsPath) {
+    val cells = graft.Tables.landedWith(s, "upsert_cells", dir) { path =>
       graft.ext.IvfIndex.assignCells(emb.filter(col("vec_id") < cutoff), cents)
-        .write.mode("overwrite").parquet(cellsPath)
+        .write.mode("overwrite").parquet(path)
       // The UPSERT: late vectors assign against the FROZEN centroids
       // and APPEND — the base partition is never rewritten or rescanned.
       graft.ext.IvfIndex.assignCells(emb.filter(col("vec_id") >= cutoff), cents)
-        .write.mode("append").parquet(cellsPath)
+        .write.mode("append").parquet(path)
     }
-    (graft.Tables.readImmutable(s, cellsPath), cents, p.probes)
+    (cells, cents, p.probes)
   }
 
   /** The upserted cell table alone — for the config-compiled retrain
@@ -430,9 +417,8 @@ object NorthStar {
         .otherwise("test").as("split"))
   }
 
-  /** The landed SRP index, built once per fixture dir — the reduction
-    * is an index BUILD; serving reads the landed table (the
-    * trainedCents/PQ-code pattern). Landed in ARRAY format (vec_id,
+  /** The landed SRP index — the reduction is an index BUILD; serving
+    * reads the landed table. Landed in ARRAY format (vec_id,
     * __r): the serving top-k consumes whole vectors, and landing the
     * long format instead forced every serving query to rebuild arrays
     * through a corpus-sized groupBy+collect_list exchange — measured
@@ -440,14 +426,10 @@ object NorthStar {
     * 10× data on an otherwise map-only+broadcast plan). The long
     * OUTPUT contract of `srp_reduce` is one map-side posexplode away.
     */
-  private def landedSrp(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_srp_arr/${graft.Tables.pathTag(dir)}"
-    graft.Tables.landOnce(path) {
+  private def landedSrp(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.landed(s, "srp_arr", dir) {
       graft.ext.RandomProjection.reduceToArrays(t(s, dir, "embeddings"), EmbDim, SrpDim)
-        .write.mode("overwrite").parquet(path)
     }
-    graft.Tables.readImmutable(s, path)
-  }
 
   /** Signed-random-projection reduced corpus, long format — the
     * integer-exact 4×-compressed embedding index
@@ -523,22 +505,17 @@ object NorthStar {
     * keep-one-survivor-per-cluster form; oracle via recursive
     * transitive closure over the same exact-Jaccard pair graph.
     */
-  /** The corpus near-dup CLUSTER MAP, landed once per fixture dir —
-    * the LSH + propagation pass is the dominant dedup cost and its
-    * output (doc_id → cluster_id) is exactly what both the cluster
-    * query and the survivor anti-join consume (the copurchase-edge
-    * landing pattern). Oracles unchanged: the landed map is the same
-    * deterministic function of the corpus.
+  /** The corpus near-dup CLUSTER MAP, landed — the LSH + propagation
+    * pass is the dominant dedup cost and its output (doc_id →
+    * cluster_id) is exactly what both the cluster query and the
+    * survivor anti-join consume. Oracles unchanged: the landed map is
+    * the same deterministic function of the corpus.
     */
-  private def landedClusters(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_clusters/${graft.Tables.pathTag(dir)}"
-    graft.Tables.landOnce(path) {
+  private def landedClusters(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.landed(s, "clusters", dir) {
       graft.ext.NearDup
         .nearDuplicateClusters(t(s, dir, "documents"), "doc_id", "text", 0.5)
-        .write.mode("overwrite").parquet(path)
     }
-    graft.Tables.readImmutable(s, path)
-  }
 
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     landedClusters(s, dir)
@@ -1111,24 +1088,20 @@ object NorthStar {
       norm.as("norm_text"), md5(norm.cast("binary")).as("norm_hash"))
   }
 
-  /** The embedding near-dup pair list, landed once per fixture dir and
-    * shared by the pair query and the triplet miner. CELL-SCOPED
-    * candidates (the SemDeDup plan, corpus-derived K) since r11: the
+  /** The embedding near-dup pair list, landed and shared by the pair
+    * query and the triplet miner. CELL-SCOPED candidates (the SemDeDup
+    * plan, corpus-derived K) since r11: the
     * fixture-geometry LSH landing went quadratic at the sf10 probe —
     * 16 buckets/band held 12.5k vectors each and the bucket self-join
     * spilled ~10¹⁰ candidates to disk (both riders failed in
     * `BENCH_r11_sf10`). The path is versioned (`_cells`) so a stale
     * LSH-era artifact can never serve the new contract.
     */
-  private def landedEmbPairs(s: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_embpairs_cells/${graft.Tables.pathTag(dir)}"
-    graft.Tables.landOnce(path) {
+  private def landedEmbPairs(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.landed(s, "embpairs_cells", dir) {
       graft.ext.SimSearch.nearDupPairsCells(t(s, dir, "embeddings"), 0.4,
           trainedCents(s, dir))
-        .write.mode("overwrite").parquet(path)
     }
-    graft.Tables.readImmutable(s, path)
-  }
 
   /** Embedding-cosine near-dup pairs (cell-scoped candidates under the
     * locked-trained centroids, exact cosine ≥ 0.4).

@@ -54,16 +54,14 @@ object Pipeline {
     * evaluation in one row-set. The stub serves arithmetic-derived
     * records so DuckDB replays the full pipeline from `range(300)`.
     *
-    * Run once per fixture dir (landOnce); re-invocations read the
-    * published table + landed report, like every other landed fixture.
+    * Runs once per fixture dir ([[graft.Tables.land]]); re-invocations
+    * read the published table + landed report.
     */
   def pipelineReport(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val tag = graft.Tables.pathTag(dir)
-    val base = s"/tmp/graft_pipe/$tag"
     val wh = graft.config.WarehouseConfig(
-      schema = "graft_pipe", table = tag, analyze = false)
-    graft.Tables.landOnce(s"pipe_$tag") {
+      schema = "graft_pipe", table = graft.Tables.pathTag(dir), analyze = false)
+    val base = graft.Tables.land("pipe", dir) { base =>
       val server = com.sun.net.httpserver.HttpServer.create(
         new java.net.InetSocketAddress(0), 0)
       try {

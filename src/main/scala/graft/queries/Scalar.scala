@@ -8,32 +8,19 @@ import graft.Tables.t
 /** Scans, projection/rename, scalar transforms, filters, quality checks —
   * SURVEY.md §2.1 (S1-S4), §2.3 (P1-P5), §2.4 (F1-F4), §2.5 (T1-T6).
   *
-  * Scan round-trips (JSON/CSV) write a scratch copy to /tmp and read it
-  * back through the engine's reader path, preserving the reference's
-  * semantics: JSON schema is inferred (transform_data.py:186-187), CSV is
-  * header=true with NO inferSchema so every column lands as string
+  * Scan round-trips (JSON/CSV/ORC) land a scratch copy
+  * ([[graft.Tables.land]]) and read it back through the engine's reader
+  * path, the operator under test, preserving the reference's
+  * semantics: JSON schema is inferred (transform_data.py:186-187), CSV
+  * is header=true with NO inferSchema so every column lands as string
   * (transform_data.py:188-189).
   */
 object Scalar {
 
-  /** Scratch landings are written ONCE per (query, sf dir) per JVM: the
-    * operator under test — and under measurement — is the reader path;
-    * re-landing identical fixture files on every invocation only
-    * re-times the write (r2 bench note: csv_scan's timing was mostly
-    * its own scratch write). Keyed by sf dir so switching fixtures
-    * re-lands.
-    */
-  private val landed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def scratch(name: String, dir: String)(write: String => Unit): String = {
-    val p = s"/tmp/graft_scratch/${graft.Tables.pathTag(dir)}/$name"
-    if (landed.add(p)) write(p)
-    p
-  }
-
   /** S1: JSON scan with schema inference (round-trip via JSON files). */
   def jsonScan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val p = scratch("json_scan", dir) { path =>
+    val p = graft.Tables.land("json_scan", dir) { path =>
       t(s, dir, "orders").select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
         .write.mode("overwrite").json(path)
     }
@@ -43,7 +30,7 @@ object Scalar {
   /** S2: CSV scan, header=true, NO inferSchema — all columns string. */
   def csvScan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val p = scratch("csv_scan", dir) { path =>
+    val p = graft.Tables.land("csv_scan", dir) { path =>
       t(s, dir, "region").write.mode("overwrite").option("header", "true").csv(path)
     }
     s.read.option("header", "true").csv(p).select($"r_regionkey", $"r_name")
@@ -64,7 +51,7 @@ object Scalar {
     */
   def orcScan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val p = scratch("orc_scan", dir) { path =>
+    val p = graft.Tables.land("orc_scan", dir) { path =>
       t(s, dir, "nation").write.mode("overwrite").orc(path)
     }
     graft.sources.SourceReader.read(s, "orc", p)

@@ -11,17 +11,15 @@ import graft.Tables.t
   * the oracle SQL unrolls every merge round (pair count → argmax with
   * the same (count desc, lhs, rhs) tie-break → literal-replace
   * application), the same unrolled-iteration discipline as the
-  * pagerank and trained-IVF oracles. Training runs once per fixture
-  * dir (landOnce) and both queries read the landed artifacts.
+  * pagerank and trained-IVF oracles. Training is landed once per
+  * fixture dir and both queries read the landed artifacts.
   */
 object Tokenizer {
 
   private[queries] val NumMerges = 20
 
-  private def landBpe(s: SparkSession, dir: String): String = {
-    val tag = graft.Tables.pathTag(dir)
-    val base = s"/tmp/graft_bpe/$tag"
-    graft.Tables.landOnce(s"bpe_$tag") {
+  private def landBpe(s: SparkSession, dir: String): String =
+    graft.Tables.land("bpe", dir) { base =>
       val (merges, vocab) = graft.ext.BpeTrain.learnMerges(
         s, t(s, dir, "documents"), "text", NumMerges)
       graft.ext.BpeTrain.mergeTable(s, merges)
@@ -31,8 +29,6 @@ object Tokenizer {
           size(array_remove(split(col("enc"), "\\|"), "")).cast("long"))
         .write.mode("overwrite").parquet(s"$base/vocab")
     }
-    base
-  }
 
   /** The learned merge table: rank, pair, merged symbol, and the pair
     * frequency that won the round.
