@@ -144,70 +144,79 @@ object ConfigLoader {
       val sh = obj(c, "shard").getOrElse(Map.empty)
       def long(m: Map[String, Any], k: String, default: Long): Long =
         m.get(k).map(v => String.valueOf(v).toDouble.toLong).getOrElse(default)
+      def dbl(m: Map[String, Any], k: String, default: Double): Double =
+        m.get(k).map(v => String.valueOf(v).toDouble).getOrElse(default)
+      // Every default is read off the case class's own default instance,
+      // so the config classes stay the one source of the defaults.
+      val d = CurationConfig()
       CurationConfig(
-        idField = str(c, "id_field", "doc_id"),
-        textField = str(c, "text_field", "text"),
-        stratumField = str(c, "stratum_field", "lang"),
-        minTokens = long(q, "min_tokens", 10),
-        maxTokens = long(q, "max_tokens", 5000),
-        minStopRatio = q.get("min_stop_ratio").map(v => String.valueOf(v).toDouble).getOrElse(0.01),
-        dedup = str(c, "dedup", "exact"),
-        mix = bool(c, "mix", default = true),
-        chunkTokens = int(ch, "tokens", 32),
-        chunkOverlap = int(ch, "overlap", 8),
-        shardBudget = long(sh, "budget", 2048),
-        shardBucketWidth = long(sh, "bucket_width", 64L << 20),
+        idField = str(c, "id_field", d.idField),
+        textField = str(c, "text_field", d.textField),
+        stratumField = str(c, "stratum_field", d.stratumField),
+        minTokens = long(q, "min_tokens", d.minTokens),
+        maxTokens = long(q, "max_tokens", d.maxTokens),
+        minStopRatio = dbl(q, "min_stop_ratio", d.minStopRatio),
+        dedup = str(c, "dedup", d.dedup),
+        mix = bool(c, "mix", d.mix),
+        chunkTokens = int(ch, "tokens", d.chunkTokens),
+        chunkOverlap = int(ch, "overlap", d.chunkOverlap),
+        shardBudget = long(sh, "budget", d.shardBudget),
+        shardBucketWidth = long(sh, "bucket_width", d.shardBucketWidth),
         semanticDedup = obj(c, "semantic_dedup").map { sd =>
+          val d = SemanticDedupConfig()
           SemanticDedupConfig(
-            tau = sd.get("tau").map(v => String.valueOf(v).toDouble).getOrElse(0.4),
-            policy = str(sd, "policy", "min_id"),
-            qualityField = str(sd, "quality_field", "label"))
+            tau = dbl(sd, "tau", d.tau),
+            policy = str(sd, "policy", d.policy),
+            qualityField = str(sd, "quality_field", d.qualityField))
         },
         similarity = obj(c, "similarity").map { si =>
+          val d = SimilarityConfig()
           SimilarityConfig(
-            queryBound = int(si, "query_bound", 100),
-            k = int(si, "k", 5),
+            queryBound = int(si, "query_bound", d.queryBound),
+            k = int(si, "k", d.k),
             candWhere = optStr(si, "cand_where"),
-            evalRecall = bool(si, "eval_recall", false),
+            evalRecall = bool(si, "eval_recall", d.evalRecall),
             retrainWhen = obj(si, "retrain_when").map { rw =>
+              val d = RetrainWhenConfig()
               RetrainWhenConfig(
-                maxDeltaPct = int(rw, "max_delta_pct", 50),
-                maxCellRatio = int(rw, "max_cell_ratio", 8))
+                maxDeltaPct = int(rw, "max_delta_pct", d.maxDeltaPct),
+                maxCellRatio = int(rw, "max_cell_ratio", d.maxCellRatio))
             })
         },
         decontam = obj(c, "decontam").map { dc =>
-          DecontamConfig(
-            evalWhere = str(dc, "eval_where"),
-            shingleLen = int(dc, "shingle_len", 3),
-            minShared = int(dc, "min_shared", 3))
+          val d = DecontamConfig(evalWhere = str(dc, "eval_where"))
+          d.copy(
+            shingleLen = int(dc, "shingle_len", d.shingleLen),
+            minShared = int(dc, "min_shared", d.minShared))
         },
         dsir = obj(c, "dsir").map { ds =>
           DsirConfig(
-            keepNum = int(ds, "keep_num", 25),
+            keepNum = int(ds, "keep_num", DsirConfig().keepNum),
             targetWhere = optStr(ds, "target_where"))
         },
         substrDedup = obj(c, "substr_dedup").map { sd =>
-          SubstrDedupConfig(windowLen = int(sd, "window_len", 8))
+          SubstrDedupConfig(windowLen = int(sd, "window_len", SubstrDedupConfig().windowLen))
         },
         lmBuckets = obj(c, "lm_buckets").map { lb =>
           LmBucketsConfig(
-            langField = str(lb, "lang_field", "lang"),
+            langField = str(lb, "lang_field", LmBucketsConfig().langField),
             refWhere = optStr(lb, "ref_where"))
         },
         gopher = obj(c, "gopher").map { g =>
-          GopherConfig(flagOnly = bool(g, "flag_only", default = true),
-            lineRules = bool(g, "line_rules", default = false),
-            repetition = bool(g, "repetition", default = false))
+          val d = GopherConfig()
+          GopherConfig(flagOnly = bool(g, "flag_only", d.flagOnly),
+            lineRules = bool(g, "line_rules", d.lineRules),
+            repetition = bool(g, "repetition", d.repetition))
         },
         c4 = obj(c, "c4").map { g =>
-          C4Config(blockWords = strSeq(g, "block_words"),
-            flagOnly = bool(g, "flag_only", default = true))
+          val d = C4Config(blockWords = strSeq(g, "block_words"))
+          d.copy(flagOnly = bool(g, "flag_only", d.flagOnly))
         },
         charset = obj(c, "charset").map { g =>
-          CharsetConfig(flagOnly = bool(g, "flag_only", default = true))
+          CharsetConfig(flagOnly = bool(g, "flag_only", CharsetConfig().flagOnly))
         },
         html = obj(c, "html").map { h =>
-          HtmlConfig(minCleanChars = int(h, "min_clean_chars", 0).toLong)
+          HtmlConfig(minCleanChars = long(h, "min_clean_chars", HtmlConfig().minCleanChars))
         })
     }
 

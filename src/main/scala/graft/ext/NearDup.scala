@@ -336,14 +336,28 @@ object NearDup {
     val e = shingleSets(evalSet, idCol, textCol, shingleLen)
       .select(col("doc_id").as("eval_id"), size(col("hs")).as("n_eval"),
         explode(col("hs")).as("h"))
-    // Both hs arrays are distinct, so each (doc, eval, h) hit is unique
-    // and count(*) IS the distinct-shared-shingle count.
-    c.join(broadcast(e), Seq("h"))
-      .groupBy(col("doc_id"), col("eval_id"), col("n_eval"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    shingleOverlap(c, e, minShared)
       .select(col("doc_id"), col("eval_id"), col("n_shared"),
         round(col("n_shared").cast("double") / col("n_eval"), 6).as("frac"))
+  }
+
+  /** The shingle-overlap kernel behind every contamination test (the
+    * batch [[contamination]] scan and the streaming tick's arrival gate
+    * and revocation probe): join exploded `(…, h)` shingle rows of
+    * `docs` against the broadcast `evals` on `h`, count the hits per
+    * group, keep groups with `n_shared >= minShared`. The group is
+    * every non-`h` column of both inputs, in input order. Each input
+    * must hold one row per (key, distinct shingle) — exploded
+    * [[shingleSets]] arrays are distinct — so count(*) IS the
+    * distinct-shared-shingle count.
+    */
+  def shingleOverlap(docs: DataFrame, evals: DataFrame,
+      minShared: Int): DataFrame = {
+    val keys = (docs.columns ++ evals.columns).filter(_ != "h").map(col)
+    docs.join(broadcast(evals), Seq("h"))
+      .groupBy(keys.toIndexedSeq: _*)
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
   }
 
   /** The LANDABLE near-dup index of a corpus: one (doc_id, bkey) row

@@ -758,10 +758,10 @@ object SimSearch {
     * (assignment is unique) so no post-join dedup is needed. Recall is
     * the same-cell assumption — the published SemDeDup contract.
     *
-    * Why not the LSH variant ([[nearDupPairs]]) for this landing: at
-    * an all-pairs workload the LSH S-curve forces a geometry trade
-    * with no good operating point at low thresholds — collision
-    * probability per band is s^r with s = 1 − θ_angle/π (≈ 0.63 at
+    * Why not LSH band-bucket candidates (the [[lshTopK]] shape) for
+    * this landing: at an all-pairs workload the LSH S-curve forces a
+    * geometry trade with no good operating point at low thresholds —
+    * collision probability per band is s^r with s = 1 − θ_angle/π (≈ 0.63 at
     * cosine 0.4), so raising `rowsPerBand` to keep buckets small at
     * corpus scale (the top-k rule) collapses recall to s^r·bands
     * (~10% at r=11), while keeping r fixture-small degenerates buckets
@@ -990,33 +990,6 @@ object SimSearch {
        |SELECT qid, cid, sim FROM rr WHERE rn = 1""".stripMargin
   }
 
-  /** Embedding-cosine near-duplicate pairs: LSH-candidate pairs
-    * (id_a < id_b sharing ≥1 band bucket) with exact cosine ≥
-    * threshold. The dedup analog of [[lshTopK]] — candidates from
-    * bucketing, verification exact, all-pairs never materialized.
-    */
-  def nearDupPairs(emb: DataFrame, threshold: Double, p: LshParams): DataFrame = {
-    val ps = planes(p.seed, p.numBands * p.rowsPerBand, p.dim, p.nnz)
-    val banded = emb.select(col("vec_id"),
-      posexplode(bandKeysNative(col("embedding"), ps, p.numBands, p.rowsPerBand))
-        .as(Seq("band", "bkey")))
-    // Duplicate candidate pairs (several shared bands) are verified
-    // redundantly and deduped AFTER the threshold filter, where only
-    // the handful of surviving pairs pay the exchange — profiling put
-    // the pre-verify distinct of ~10^6 pairs at ~5s vs ~0.2s of
-    // redundant codegen'd dot products.
-    val cand = banded.select(col("band"), col("bkey"), col("vec_id").as("id_a"))
-      .join(banded.select(col("band"), col("bkey"), col("vec_id").as("id_b")),
-        Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    cand.join(normed(emb, "id_a", "v_a", "n_a"), "id_a")
-      .join(normed(emb, "id_b", "v_b", "n_b"), "id_b")
-      .select(col("id_a"), col("id_b"), cos6("v_a", "v_b", "n_a", "n_b").as("sim"))
-      .filter(col("sim") >= threshold)
-      .distinct()
-  }
-
   /** Shared oracle CTE prefix: embeddings as double arrays, the plane
     * projections, band keys, and the per-band bucket rows.
     */
@@ -1056,19 +1029,10 @@ object SimSearch {
        |      FROM p)
        |SELECT qid, cid, sim FROM r WHERE rn = 1""".stripMargin
 
-  /** DuckDB oracle for [[nearDupPairs]]. */
-  def nearDupOracleSql(threshold: Double, p: LshParams): String =
-    s"""WITH ${bucketCtes(p)},
-       |cand AS (SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b
-       |         FROM b a JOIN b c ON a.band = c.band AND a.bkey = c.bkey
-       |         WHERE a.vec_id < c.vec_id),
-       |p AS (SELECT id_a, id_b, round(list_cosine_similarity(va.v, vb.v), 6) AS sim
-       |      FROM cand JOIN v va ON va.vec_id = id_a JOIN v vb ON vb.vec_id = id_b)
-       |SELECT id_a, id_b, sim FROM p WHERE sim >= $threshold""".stripMargin
-
   /** Contrastive (anchor, positive, negative) triplet mining — the
     * training-data prep for embedding/retrieval models: each near-dup
-    * pair ([[nearDupPairsCells]] / [[nearDupPairs]] output) contributes its members as anchor/positive, and the negative
+    * pair ([[nearDupPairsCells]] output) contributes its members as
+    * anchor/positive, and the negative
     * is drawn DETERMINISTICALLY from the pair list itself (the member
     * of the pair half the list away, in (id_a, id_b) order) — no
     * randomness state, exact across engines. A triplet is dropped if

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.config.CurationConfig
+import graft.transform.CurationCompiler
 
 /** North-star LLM-data-pipeline battery (BASELINE.json): dedup,
   * similarity search, text analysis, multimodal plumbing.
@@ -88,21 +90,13 @@ object NorthStar {
   }
 
   /** Shared quality heuristics: one stopword list and token columns
-    * feed BOTH the scorer (text_quality) and the gate (quality_filter)
-    * so they can never silently diverge.
+    * feed BOTH the scorer (text_quality) and the gate
+    * ([[CurationCompiler.qualityGate]]) so they can never silently
+    * diverge.
     */
   private val QualityStopwords = graft.ext.TextAnalysis.QualityStopwords
   private def qToks = split(trim(org.apache.spark.sql.functions.col("text")), "\\s+")
-  private def qTok = graft.ext.TextAnalysis
-    .qualityTokenCount(org.apache.spark.sql.functions.col("text"))
   private def qStop = size(filter(qToks, c => c.isInCollection(QualityStopwords)))
-
-  /** Codegen'd regex stopword count — shared with the curation
-    * compiler via [[graft.ext.TextAnalysis.qualityStopwordCount]]
-    * (equality proof in its Scaladoc).
-    */
-  private def qStopFast = graft.ext.TextAnalysis
-    .qualityStopwordCount(org.apache.spark.sql.functions.col("text"))
 
   /** Text-quality scoring: stopword ratio, mean token length,
     * type-token ratio — the length/punct/stopword heuristics of a
@@ -111,7 +105,7 @@ object NorthStar {
   def textQuality(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val toks = qToks
-    val nTok = qTok
+    val nTok = graft.ext.TextAnalysis.qualityTokenCount($"text")
     val nStop = qStop
     t(s, dir, "documents").select(
       $"doc_id",
@@ -565,14 +559,7 @@ object NorthStar {
     val survivors = graft.ext.NearDup.dedupSurvivors(
       docs, "doc_id", "text", 0.5,
       precomputedClusters = Some(landedClusters(s, dir)))
-    // Same project-then-filter shape (and barrier) as qualityFilter:
-    // tokenize once in a codegen'd Project, filter on the counts.
-    val gated = survivors
-      .withColumn("__ntok", qTok.cast("long"))
-      .withColumn("__nstop", qStopFast.cast("double"))
-      .withColumn("__barrier", monotonically_increasing_id())
-      .filter($"__ntok" >= 10 && $"__ntok" <= 5000 &&
-        $"__nstop" / $"__ntok" >= 0.01 && $"__barrier" >= 0)
+    val gated = CurationCompiler.qualityGate(CurationConfig())(survivors)
       .drop("__ntok", "__nstop", "__barrier")
     graft.ext.TextAnalysis.stratifiedSample(gated, "doc_id", "lang", MixRates)
       .select($"doc_id", $"lang", $"source", $"n_chars")
@@ -584,12 +571,8 @@ object NorthStar {
     */
   def qualityFilter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "documents")
-      .select($"doc_id", qTok.cast("long").as("n_tokens"),
-        qStopFast.cast("double").as("n_stop"),
-        monotonically_increasing_id().as("__barrier"))
-      .filter($"n_tokens" >= 10 && $"n_tokens" <= 5000 &&
-        $"n_stop" / $"n_tokens" >= 0.01 && $"__barrier" >= 0)
+    CurationCompiler.qualityGate(CurationConfig(), nTok = "n_tokens", nStop = "n_stop")(
+        t(s, dir, "documents"))
       .select($"doc_id", $"n_tokens")
   }
 
@@ -600,10 +583,8 @@ object NorthStar {
     * with a separate trusted corpus unions it in with a membership
     * flag; the operator only sees a boolean column either way.
     */
-  private def dsirTarget: org.apache.spark.sql.Column = {
-    val nTok = qTok.cast("long")
-    nTok >= 10 && nTok <= 5000 && qStopFast.cast("double") / nTok >= 0.01
-  }
+  private def dsirTarget: org.apache.spark.sql.Column =
+    CurationCompiler.qualityPredicate(CurationConfig())
 
   /** CCNet-style LM quality terciles: the quality gate defines the
     * reference corpus (the same [[dsirTarget]] predicate — reference
@@ -636,13 +617,12 @@ object NorthStar {
     * quality gate → exact-dedup survivors → temperature-flattened
     * language mix → 32/8 context-window chunking → 2048-token shard
     * assignment. One registered query, one oracle, every stage exact.
-    * The chain is [[graft.transform.CurationCompiler.compile]] at the
-    * default [[graft.config.CurationConfig]]; `cfg_curation` reaches
+    * The chain is [[CurationCompiler.compile]] at the default
+    * [[CurationConfig]]; `cfg_curation` reaches
     * the same plan from YAML (its scale shape is documented there).
     */
   def trainingManifest(s: SparkSession, dir: String): DataFrame =
-    graft.transform.CurationCompiler.compile(graft.config.CurationConfig())(
-      t(s, dir, "documents"))
+    CurationCompiler.compile(CurationConfig())(t(s, dir, "documents"))
 
   /** C4-style duplicated-span statistics (8-token blocks) —
     * [[graft.ext.TextAnalysis.spanDedupStats]].

@@ -10,26 +10,21 @@ import graft.config.CurationConfig
 import graft.ext.{NearDup, TextAnalysis}
 import graft.transform.CurationCompiler
 
-/** The FULL config-compiled curation chain as a stream: documents
-  * arriving on a stream land in an idempotent landing zone, and each
-  * micro-batch re-materializes the curated corpus — optional eval-set
-  * decontamination gate, then gate → dedup → mix → chunk → shard via
-  * [[CurationCompiler.compile]] VERBATIM (the same code path the
-  * `cfg_curation` registered query gates). The streaming twin of
-  * `cfg_curation`, driven from the same `curation:` config section.
+/** The FULL config-compiled curation chain as a stream — the
+  * streaming twin of `cfg_curation`, driven from the same `curation:`
+  * config section: optional eval-set decontamination gate, then
+  * gate → dedup → mix → chunk → shard. After every micro-batch the
+  * published output equals [[curate]], the batch chain
+  * ([[CurationCompiler.compile]]) over every document delivered so far.
   *
-  * Two maintenance modes:
-  *
-  * **Re-materialize** ([[start]]): each micro-batch re-runs the batch
-  * chain over the accumulated landing zone. Semantically bulletproof
-  * (after the last batch the output IS `compile(cu)(allDocs)` by
-  * construction) but O(corpus) work per batch — the right mode for
-  * bounded corpora or slow triggers.
-  *
-  * **Incremental** ([[startIncremental]]): per-batch work touching
-  * TEXT is bounded by the batch — the quality gate, digesting,
-  * chunking, and shingling run on batch rows only — and everything
-  * corpus-global is maintained as fixed-width metadata state:
+  * One maintenance mode, incremental ([[startIncremental]]). Each stage
+  * decision is the batch chain's own definition — the quality gate
+  * ([[CurationCompiler.gate]]), the dedup digest
+  * ([[CurationCompiler.dedupDigest]]) and the shingle-overlap test
+  * ([[NearDup.shingleOverlap]]) — so the equality holds by construction.
+  * Per-batch work touching TEXT is bounded by the batch — gating,
+  * digesting, chunking and shingling run on batch rows only — and
+  * everything corpus-global is maintained as fixed-width metadata state:
   *  - `index/v=N`: the exact-dedup winner per digest (digest, min id,
   *    stratum) — the min-merge against each batch is the
   *    incremental-rollup fold, replay-idempotent because version N is
@@ -65,13 +60,12 @@ import graft.transform.CurationCompiler
   * metadata) re-materializes per batch — the streamed-MV maintenance
   * shape, all fixed-width columns, no text.
   *
-  * Exactly-once (both modes): state writes are deterministic
-  * functions of (prior-version state, batch) keyed by batchId, and
-  * the output commit is one ATOMIC pointer swap — `v=<batchId>` dirs
-  * plus a `_CURRENT` pointer file renamed into place with
-  * Rename.OVERWRITE, so [[readOutput]] sees old-or-new, never a
-  * half-overwritten directory (and a replayed micro-batch reproduces
-  * byte-identical state).
+  * Exactly-once: state writes are deterministic functions of
+  * (prior-version state, batch) keyed by batchId, and the output commit
+  * is one ATOMIC pointer swap — `v=<batchId>` dirs plus a `_CURRENT`
+  * pointer file renamed into place with Rename.OVERWRITE, so
+  * [[readOutput]] sees old-or-new, never a half-overwritten directory
+  * (and a replayed micro-batch reproduces byte-identical state).
   */
 object StreamCuration {
 
@@ -146,7 +140,7 @@ object StreamCuration {
     }
 
   // ---------------------------------------------------------------
-  // Atomic versioned output publish (shared by both modes)
+  // Atomic versioned output publish
   // ---------------------------------------------------------------
 
   /** Write `df` as `outDir/v=<version>` and atomically re-point
@@ -170,17 +164,15 @@ object StreamCuration {
     spark.read.parquet(s"$outDir/$version")
   }
 
-  // ---------------------------------------------------------------
-  // Re-materialize mode (the semantics baseline)
-  // ---------------------------------------------------------------
-
-  /** The curation chain over the accumulated landing zone: drop eval
-    * rows and contaminated documents when a `decontam:` section is
-    * present, then [[CurationCompiler.compile]] verbatim.
+  /** The batch reference: the curation chain over a parquet landing
+    * zone of every delivered document — drop eval rows and contaminated
+    * documents when a `decontam:` section is present, then
+    * [[CurationCompiler.compile]] verbatim. The incremental output
+    * equals it after every tick.
     */
   def curate(spark: SparkSession, cu: CurationConfig,
       landingDir: String): DataFrame = {
-    val corpus0 = spark.read.parquet(landingDir).drop("batch_id")
+    val corpus0 = spark.read.parquet(landingDir)
     val corpus = cu.decontam match {
       case Some(dc) =>
         val hits = CurationCompiler
@@ -193,32 +185,8 @@ object StreamCuration {
     CurationCompiler.compile(cu)(corpus)
   }
 
-  /** One micro-batch: idempotent landing append (batchId partition,
-    * overwritten on replay) + re-materialization of the curated
-    * output, committed by one atomic pointer swap.
-    */
-  def writeBatch(batch: DataFrame, batchId: Long, cu: CurationConfig,
-      landingDir: String, outDir: String): Unit = {
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(landingDir)
-    publishOutput(curate(batch.sparkSession, cu, landingDir), outDir, batchId)
-  }
-
-  def start(spark: SparkSession, docs: DataFrame, cu: CurationConfig,
-      landingDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, cu, landingDir, outDir)
-      }
-      .start()
-
   // ---------------------------------------------------------------
-  // Incremental mode (bounded per-batch text work)
+  // The tick (bounded per-batch text work)
   // ---------------------------------------------------------------
 
   /** Newest state version strictly below `below`, or None before the
@@ -253,6 +221,11 @@ object StreamCuration {
       cu: CurationConfig, stateDir: String, outDir: String): Unit = {
     val spark = batch0.sparkSession
     val idF = cu.idField; val textF = cu.textField; val stratF = cu.stratumField
+    // 'none' still flows through the index: a unique per-id digest
+    // makes every gated row its own singleton winner. Resolved before
+    // any state write, so a bad policy fails with nothing written.
+    val digest = CurationCompiler.dedupDigest(cu)
+      .getOrElse(concat(lit("id:"), col(idF).cast("string")))
     val batch = batch0.cache()
     val prevV = latestVersion(spark, s"$stateDir/index", below = batchId)
     val oldIndex = prevV.map(v => spark.read.parquet(s"$stateDir/index/v=$v"))
@@ -286,11 +259,7 @@ object StreamCuration {
         val candDocs = batch.filter(!evalPred)
         val candSh = NearDup.shingleSets(candDocs, idF, textF, dc.shingleLen)
           .select(col("doc_id"), explode(col("hs")).as("h"))
-        // hs arrays are distinct, so count(*) is the distinct-shared count.
-        val contaminated = candSh.join(broadcast(evalShAll), Seq("h"))
-          .groupBy(col("doc_id"), col("eval_id"))
-          .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") >= dc.minShared)
+        val contaminated = NearDup.shingleOverlap(candSh, evalShAll, dc.minShared)
           .select(col("doc_id").as(idF)).distinct()
         candDocs.join(contaminated, Seq(idF), "left_anti")
       case None => batch.toDF()
@@ -298,14 +267,6 @@ object StreamCuration {
 
     // -- 2. gate (the batch chain's exact expressions) + digest
     val gated = CurationCompiler.gate(cu)(cand)
-    val digest = cu.dedup match {
-      case "exact" => md5(col(textF).cast("binary"))
-      // 'none' still flows through the index: a unique per-id digest
-      // makes every gated row its own singleton winner.
-      case "none" => concat(lit("id:"), col(idF).cast("string"))
-      case other => throw new IllegalArgumentException(
-        s"curation.dedup must be 'exact' or 'none', got '$other'")
-    }
     // b_n: the digest group's gated rows — summed, the gated_rows stat.
     val batchBest = gated.withColumn("__h", digest)
       .groupBy(col("__h"))
@@ -361,11 +322,8 @@ object StreamCuration {
         // reads the shingle store, whose batch-N dir step 6 OVERWRITES
         // on a replay — without the checkpoint a later action
         // re-executing this plan would chase deleted files.
-        shState.join(broadcast(newEvalShPart.select(col("eval_id"), col("h"))),
-            Seq("h"))
-          .groupBy(col("__h"), col("eval_id"))
-          .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") >= dc.minShared)
+        NearDup.shingleOverlap(shState,
+            newEvalShPart.select(col("eval_id"), col("h")), dc.minShared)
           .select(col("__h")).distinct()
           .localCheckpoint(true)
       case _ => emptyDf(spark, StructType(Seq(StructField("__h", StringType))))

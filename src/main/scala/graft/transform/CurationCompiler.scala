@@ -16,12 +16,16 @@ import graft.ext.{SeqPack, TextAnalysis}
   * from Scala.
   *
   * Every stage is the SAME library operator the standalone registered
-  * queries gate ([[TextAnalysis.qualityTokenCount]] /
-  * [[TextAnalysis.qualityStopwordCount]], md5 exact dedup,
-  * [[TextAnalysis.temperatureMix]], [[TextAnalysis.docChunks]],
-  * [[SeqPack.tokenShards]]); at default parameters [[compile]] IS the
-  * `training_manifest` query, and the `cfg_curation` registered query
-  * reaches it through YAML against the same oracle.
+  * queries gate ([[TextAnalysis.temperatureMix]],
+  * [[TextAnalysis.docChunks]], [[SeqPack.tokenShards]]); at default
+  * parameters [[compile]] IS the `training_manifest` query, and the
+  * `cfg_curation` registered query reaches it through YAML against the
+  * same oracle. Each stage decision is defined once here and shared
+  * with every other caller: the quality gate ([[qualityGate]], also
+  * behind `quality_filter`, `corpus_mix` and the dsir/ccnet targets)
+  * and the dedup policy ([[dedupDigest]]). The incremental streaming
+  * twin ([[graft.stream.StreamCuration]]) reuses them, so its output
+  * equals [[compile]] by construction, not by parallel code.
   *
   * Scale shape: the gate is map-only codegen'd regex work; dedup is
   * one window over the md5-digest exchange; the mix is a broadcast
@@ -39,23 +43,20 @@ object CurationCompiler {
 
   def compile(cu: CurationConfig)(docs: DataFrame): DataFrame = {
     val id = col(cu.idField)
-    val text = col(cu.textField)
 
     val gated = gate(cu)(docs)
 
-    val survivors = cu.dedup match {
-      case "exact" =>
+    val survivors = dedupDigest(cu) match {
+      case Some(digest) =>
         // Keep the lowest id per digest with a window over the digest
         // exchange: the survivors stream straight out of it, where a
         // keep-side groupBy joined back would be a second consumer
         // needing other columns — a second gate + md5 text pass.
-        gated.withColumn("__h", md5(text.cast("binary")))
+        gated.withColumn("__h", digest)
           .withColumn("__min", min(id).over(Window.partitionBy(col("__h"))))
           .filter(id === col("__min"))
           .drop("__h", "__min")
-      case "none" => gated
-      case other => throw new IllegalArgumentException(
-        s"curation.dedup must be 'exact' or 'none', got '$other'")
+      case None => gated
     }
 
     val mixed =
@@ -65,36 +66,63 @@ object CurationCompiler {
     assignShards(cu)(chunksKeyed(cu)(mixed))
   }
 
-  /** The quality gate stage of [[compile]] on its own: (id, text,
-    * stratum) rows passing the token/stop-ratio thresholds. Factored
-    * so the incremental streaming twin
-    * ([[graft.stream.StreamCuration]]) gates each micro-batch with the
-    * EXACT expressions the batch chain applies — per-doc, so gating a
-    * batch equals gating its rows inside the full corpus.
+  /** The `dedup` policy: the md5 text digest whose lowest id survives
+    * (`exact`), or None (`none`). Every consumer of the policy — the
+    * batch chain and the incremental tick — validates it here, so a bad
+    * kind fails the same way in both.
     */
-  def gate(cu: CurationConfig)(docs: DataFrame): DataFrame = {
-    val text = col(cu.textField)
+  def dedupDigest(cu: CurationConfig): Option[Column] = cu.dedup match {
+    case "exact" => Some(md5(col(cu.textField).cast("binary")))
+    case "none" => None
+    case other => throw new IllegalArgumentException(
+      s"curation.dedup must be 'exact' or 'none', got '$other'")
+  }
+
+  /** The quality gate: the ONE definition of "quality" in the project.
+    * [[gate]], the registered `quality_filter` / `corpus_mix` queries
+    * and the incremental streaming twin
+    * ([[graft.stream.StreamCuration]]) filter with it; [[qualityPredicate]]
+    * is its test as a condition. Returns `docs` with the passing rows,
+    * plus the whitespace token count (`nTok`, long), the stopword count
+    * (`nStop`, double) and `__barrier` — callers project what they
+    * need. Per-doc, so gating a batch equals gating its rows inside the
+    * full corpus.
+    */
+  def qualityGate(cu: CurationConfig, nTok: String = "__ntok",
+      nStop: String = "__nstop")(docs: DataFrame): DataFrame = {
+    val (tok, stop) = qualityCounts(cu)
     docs
-      .withColumn("__ntok", TextAnalysis.qualityTokenCount(text).cast("long"))
-      .withColumn("__nstop", TextAnalysis.qualityStopwordCount(text).cast("double"))
+      .withColumn(nTok, tok)
+      .withColumn(nStop, stop)
       // Nondeterministic barrier: keeps the tokenize in ONE codegen'd
       // Project instead of being re-inlined into the Filter twice.
       .withColumn("__barrier", monotonically_increasing_id())
-      .filter(col("__ntok") >= cu.minTokens && col("__ntok") <= cu.maxTokens &&
-        col("__nstop") / col("__ntok") >= cu.minStopRatio && col("__barrier") >= 0)
-      .select(col(cu.idField), text, col(cu.stratumField))
+      .filter(qualityTest(cu, col(nTok), col(nStop)) && col("__barrier") >= 0)
   }
 
-  /** [[gate]]'s quality test as one predicate column, for sections that
+  /** The quality gate stage of [[compile]]: (id, text, stratum) rows
+    * passing [[qualityGate]].
+    */
+  def gate(cu: CurationConfig)(docs: DataFrame): DataFrame =
+    qualityGate(cu)(docs).select(col(cu.idField), col(cu.textField), col(cu.stratumField))
+
+  /** [[qualityGate]]'s test as one predicate column, for stages that
     * need "quality" as a condition rather than a filter (the dsir
     * target and the lm_buckets reference default to it).
     */
-  private def qualityPredicate(cu: CurationConfig): Column = {
-    val nTok = TextAnalysis.qualityTokenCount(col(cu.textField)).cast("long")
-    nTok >= cu.minTokens && nTok <= cu.maxTokens &&
-      TextAnalysis.qualityStopwordCount(col(cu.textField)).cast("double") /
-        nTok >= cu.minStopRatio
+  def qualityPredicate(cu: CurationConfig): Column = {
+    val (tok, stop) = qualityCounts(cu)
+    qualityTest(cu, tok, stop)
   }
+
+  private def qualityCounts(cu: CurationConfig): (Column, Column) = {
+    val text = col(cu.textField)
+    (TextAnalysis.qualityTokenCount(text).cast("long"),
+      TextAnalysis.qualityStopwordCount(text).cast("double"))
+  }
+
+  private def qualityTest(cu: CurationConfig, nTok: Column, nStop: Column): Column =
+    nTok >= cu.minTokens && nTok <= cu.maxTokens && nStop / nTok >= cu.minStopRatio
 
   /** Context-window chunks of `docs` with the composite (doc, chunk)
     * order key — chunk_id < 2^20 by construction at any realistic

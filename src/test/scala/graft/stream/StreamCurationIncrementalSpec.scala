@@ -6,11 +6,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.SparkTestBase
+import graft.config.CurationConfig
 import graft.transform.CurationCompiler
 
-/** The bounded-work streaming curation mode: per-batch TEXT work is
-  * bounded by the batch (gate/digest/chunk/shingle run on batch rows
-  * only — plan-asserted, not prose), corpus-global stages are
+case class ScDoc(doc_id: Long, text: String, lang: String)
+
+/** The streaming curation chain: per-batch TEXT work is bounded by
+  * the batch (gate/digest/chunk/shingle run on batch rows only —
+  * plan-asserted, not prose), corpus-global stages are
   * maintained as fixed-width metadata state (min-merge dedup index,
   * folded stratum counts, chunk-metadata store, shingle revocation
   * state), and the materialized output equals
@@ -48,9 +51,11 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
       |""".stripMargin)
     .curation.getOrElse(throw new IllegalStateException("no curation section"))
 
-  // Same corpus as StreamCurationSpec: doc 100 is the eval row and
-  // ARRIVES LAST, so under any multi-batch slicing the contaminated
-  // doc 7 is accepted first and must be retroactively revoked.
+  // Doc 100 is the eval row and ARRIVES LAST, so under any multi-batch
+  // slicing the contaminated doc 7 (it shares a 3-shingle with doc 100)
+  // is accepted first and must be retroactively revoked. Doc 8
+  // duplicates doc 2's text (exact-dedup loser); doc 9 is below the
+  // 3-token gate.
   private val corpus = Seq(
     ScDoc(1L, "the quick brown fox jumps over fences", "en"),
     ScDoc(2L, "data pipelines shuffle rows across executors", "en"),
@@ -67,6 +72,15 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
   }
 
   private def tmp(tag: String) = Files.createTempDirectory(tag).toString
+
+  test("contaminated and eval docs are gated; the duplicate loses; short doc gated") {
+    val ids = batchTruth().map(_.head.asInstanceOf[Long])
+    assert(!ids.contains(7L))   // contaminated
+    assert(!ids.contains(100L)) // eval row is not corpus
+    assert(!ids.contains(8L))   // exact-dedup loser (doc 2 is min id)
+    assert(!ids.contains(9L))   // below the token gate
+    assert(ids.contains(1L) && ids.contains(2L))
+  }
 
   private def runStream(docs: Seq[ScDoc], split: Int,
       stateDir: String, outDir: String, ckpt: String): Unit = {
@@ -167,10 +181,10 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
   }
 
   private def writeTicks(ticks: Seq[Seq[ScDoc]], st: String, out: String,
-      from: Long = 0L): Unit = {
+      from: Long = 0L, c: CurationConfig = cu): Unit = {
     val s = spark; import s.implicits._
     ticks.zipWithIndex.foreach { case (g, i) =>
-      StreamCuration.writeBatchIncremental(g.toDF(), from + i, cu, st, out)
+      StreamCuration.writeBatchIncremental(g.toDF(), from + i, c, st, out)
     }
   }
 
@@ -408,5 +422,49 @@ class StreamCurationIncrementalSpec extends SparkTestBase {
       StreamCuration.writeBatchIncremental(g.toDF(), i.toLong, cu2, st, out)
     }
     assert(StreamCuration.readOutput(s, out).collect().map(_.toSeq).toSet == truth)
+  }
+
+  test("the overlap threshold boundary: at min_shared 2 a one-shingle overlap" +
+    " is kept and a two-shingle overlap is gated, at arrival and by revocation") {
+    val s = spark; import s.implicits._
+    val cu2 = cu.copy(decontam = cu.decontam.map(_.copy(minShared = 2)))
+    // Eval shingles: "benchmark answer key", "answer key held", "key held out".
+    val eval = corpus.last
+    val one = corpus(4) // doc 7: shares exactly "benchmark answer key"
+    val two = ScDoc(12L, "benchmark answer key held back today", "en") // shares 2
+    val rest = Seq(corpus(0), corpus(1), one, two)
+    def winnerIds(st: String): Set[Long] = {
+      val v = new java.io.File(s"$st/index").listFiles().map(_.getName)
+        .filter(_.startsWith("v=")).map(_.drop(2).toLong).max
+      s.read.parquet(s"$st/index/v=$v").select("id").as[Long].collect().toSet
+    }
+    for ((order, ticks) <- Seq(
+        "eval first" -> Seq(Seq(eval), rest),
+        "eval last" -> Seq(rest, Seq(eval)))) {
+      val (st, out) = (tmp("sci_min2"), tmp("sci_min2out"))
+      ticks.indices.foreach { i =>
+        writeTicks(Seq(ticks(i)), st, out, from = i.toLong, c = cu2)
+        val soFar = ticks.take(i + 1).flatten
+        assert(output(out) ===
+          StreamCurationSpecHelper.landAndCurate(s, cu2, soFar.toDF()),
+          s"$order: tick $i")
+      }
+      val ids = winnerIds(st)
+      assert(ids.contains(7L), s"$order: a one-shingle overlap is below min_shared 2")
+      assert(!ids.contains(12L), s"$order: a two-shingle overlap meets min_shared 2")
+    }
+  }
+}
+
+/** Batch-side truth builder: the parquet landing + [[StreamCuration.curate]]
+  * with all rows in one batch — what the stream must converge to.
+  */
+object StreamCurationSpecHelper {
+  def landAndCurate(s: org.apache.spark.sql.SparkSession,
+      cu: graft.config.CurationConfig,
+      docs: org.apache.spark.sql.DataFrame): Set[Seq[Any]] = {
+    val landing = Files.createTempDirectory("sc_truth").toString
+    docs.write.mode("overwrite").parquet(landing)
+    StreamCuration.curate(s, cu, landing).collect().map(_.toSeq).toSet
   }
 }

@@ -31,12 +31,55 @@ class CurationCompilerSpec extends SparkTestBase {
     assert(cu.chunkTokens == 64 && cu.chunkOverlap == 8)
     assert(cu.shardBudget == 2048L && cu.shardBucketWidth == (64L << 20))
     assert(ConfigLoader.fromYaml("source:\n  name: x\n  type: file\n").curation.isEmpty)
+    // Every subsection present but empty: each defaulted field loads
+    // equal to its case-class default (the fields without a default,
+    // eval_where and block_words, load empty).
+    val allEmpty = ConfigLoader.fromYaml(
+      """source:
+        |  name: e
+        |  type: file
+        |  curation:
+        |    quality: {}
+        |    chunk: {}
+        |    shard: {}
+        |    semantic_dedup: {}
+        |    similarity: {retrain_when: {}}
+        |    decontam: {}
+        |    dsir: {}
+        |    substr_dedup: {}
+        |    lm_buckets: {}
+        |    gopher: {}
+        |    c4: {}
+        |    charset: {}
+        |    html: {}
+        |""".stripMargin).curation.get
+    import graft.config._
+    assert(allEmpty == CurationConfig(
+      semanticDedup = Some(SemanticDedupConfig()),
+      similarity = Some(SimilarityConfig(retrainWhen = Some(RetrainWhenConfig()))),
+      decontam = Some(DecontamConfig(evalWhere = "")),
+      dsir = Some(DsirConfig()),
+      substrDedup = Some(SubstrDedupConfig()),
+      lmBuckets = Some(LmBucketsConfig()),
+      gopher = Some(GopherConfig()),
+      c4 = Some(C4Config(blockWords = Nil)),
+      charset = Some(CharsetConfig()),
+      html = Some(HtmlConfig())))
   }
 
   test("bad dedup kind fails loudly") {
     val cu = graft.config.CurationConfig(dedup = "minhashish")
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    intercept[IllegalArgumentException](CurationCompiler.compile(cu)(docs))
+    val batch = intercept[IllegalArgumentException](CurationCompiler.compile(cu)(docs))
+    // The incremental tick validates through the same definition, and
+    // fails before writing any state.
+    val dir = java.nio.file.Files.createTempDirectory("bad-dedup").toString
+    val tick = intercept[IllegalArgumentException](
+      graft.stream.StreamCuration.writeBatchIncremental(docs.limit(8), 0L, cu,
+        s"$dir/state", s"$dir/out"))
+    assert(tick.getMessage == batch.getMessage)
+    assert(tick.getMessage.contains("'minhashish'"))
+    assert(!new java.io.File(s"$dir/state").exists())
   }
 
   test("config-compiled pipeline equals the Scala-composed training_manifest") {
